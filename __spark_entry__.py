@@ -144,21 +144,20 @@ def q_suggest_auto(metric: Metric, alpha: float, k: int, literals=SUGGEST_LITERA
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         import tempfile
 
-        from suggest_spark.operators.indexing import (
-            read_index_stats,
-            read_ngram_index,
-            write_index_stats,
-            write_ngram_index,
-        )
+        from suggest_spark.operators.indexing import read_index_stats, write_index_stats
         from suggest_spark.operators.suggest import suggest_topk_auto
+        from suggest_spark.operators.versioned import (
+            read_versioned_index,
+            write_versioned_index,
+        )
 
         dictionary = _part_dictionary(spark, sf_dir)
         base = tempfile.mkdtemp(prefix="suggest_auto_gate_")
         index = build_ngram_index(dictionary, config=CFG)
-        write_ngram_index(index, f"{base}/index")
+        write_versioned_index(index, f"{base}/index")
         write_index_stats(spark, index, f"{base}/stats")
         out = suggest_topk_auto(
-            read_ngram_index(spark, f"{base}/index"),
+            read_versioned_index(spark, f"{base}/index"),
             _literals_df(spark, literals),
             metric,
             alpha,
@@ -275,24 +274,24 @@ _UPSERT_DELETED = [20]
 def q_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental disc-index maintenance under the value-hash gate: build
     the doc_id<200 index on disk, upsert (replace doc 10, add a new doc,
-    delete doc 20) through the partition-pruned dynamic-overwrite path, and
-    return the FINAL ON-DISK index — the oracle rebuilds the post-upsert
+    delete doc 20) through the versioned copy-on-write path, and return the
+    FINAL ON-DISK index — the oracle rebuilds the post-upsert
     dictionary from scratch, so any stale or lost row hash-mismatches."""
     import tempfile
 
-    from suggest_spark.operators.indexing import (
-        read_ngram_index,
-        upsert_ngram_index,
-        write_ngram_index,
+    from suggest_spark.operators.versioned import (
+        read_versioned_index,
+        upsert_versioned_index,
+        write_versioned_index,
     )
 
     dictionary = _part_dictionary(spark, sf_dir).where(F.col("doc_id") < 200)
     path = tempfile.mkdtemp(prefix="upsert_gate_") + "/idx"
-    write_ngram_index(build_ngram_index(dictionary, config=CFG), path)
+    write_versioned_index(build_ngram_index(dictionary, config=CFG), path)
     new_docs = spark.createDataFrame(_UPSERT_NEW, "doc_id long, value string")
     deleted = spark.createDataFrame([(i,) for i in _UPSERT_DELETED], "doc_id long")
-    upsert_ngram_index(spark, path, new_docs, CFG, deleted_ids=deleted)
-    return read_ngram_index(spark, path).select(
+    upsert_versioned_index(spark, path, new_docs, CFG, deleted_ids=deleted)
+    return read_versioned_index(spark, path).select(
         "doc_id", F.col("size").cast("int").alias("size"), "term"
     )
 
@@ -325,7 +324,7 @@ def q_dict_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from suggest_spark.operators.versioned import (
-        read_versioned_table,
+        read_versioned_bucketed_table,
         upsert_versioned_bucketed_table,
         write_versioned_bucketed_table,
     )
@@ -336,7 +335,7 @@ def q_dict_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_docs = spark.createDataFrame(_UPSERT_NEW, "doc_id long, value string")
     deleted = spark.createDataFrame([(i,) for i in _UPSERT_DELETED], "doc_id long")
     upsert_versioned_bucketed_table(spark, base, new_docs, deleted_keys=deleted)
-    return read_versioned_table(spark, base).select("doc_id", "value")
+    return read_versioned_bucketed_table(spark, base).select("doc_id", "value")
 
 
 SQL_DICT_BUCKETED_UPSERT = f"""
@@ -363,7 +362,7 @@ def q_dict_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from suggest_spark.operators.versioned import (
-        read_versioned_table,
+        read_versioned_bucketed_table,
         rebucket_versioned_bucketed_table,
         upsert_versioned_bucketed_table,
         write_versioned_bucketed_table,
@@ -390,7 +389,7 @@ def q_dict_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(i,) for i in _REBUCKET_DELETED], "doc_id long"
         ),
     )
-    return read_versioned_table(spark, base).select("doc_id", "value")
+    return read_versioned_bucketed_table(spark, base).select("doc_id", "value")
 
 
 _rebucket_values = ", ".join(f"({i}, '{v}')" for i, v in _REBUCKET_NEW)

@@ -8,11 +8,16 @@ indexJob does).
 
     python jobs/indexer_job.py --config config.json [--base-dir DIR]
 
-Output layout per description: ``<output>/<name>_dictionary`` (parquet
-(doc_id, value) — the CDB analogue) and ``<output>/<name>_index`` (parquet
-(size=…/term, doc_id) — the inverted-index directory analogue).  A running
-SuggestService picks the rebuilt index up via ``add_disc_index(...,
-rebuild=False)`` — the POST /internal/reindex analogue.
+Output layout per description, both in the one versioned layout of
+operators/versioned.py: ``<output>/<name>_dictionary`` ((doc_id, value)
+bucketed by doc_id — the CDB analogue) and ``<output>/<name>_index``
+((doc_id, size, term) partitioned by size — the inverted-index directory
+analogue).  The dictionary is written first, then the index, as
+``SuggestService.add_disc_index`` does.  A re-run over the same output
+commits new versions beside the old ones, so a service still serving the
+previous run keeps reading its snapshot; superseded versions are GC'd after
+``SuggestService.gc_min_age_sec``.  A service picks the rebuilt artifacts up
+via ``load_disc_index``.
 """
 
 from __future__ import annotations
@@ -30,10 +35,18 @@ from suggest_spark.operators.indexing import (
     build_ngram_index,
     invalidate_index_stats,
     write_index_stats,
-    write_ngram_index,
+)
+from suggest_spark.operators.service import SuggestService
+from suggest_spark.operators.versioned import (
+    checked_manifest,
+    gc_versions,
+    read_versioned_bucketed_table,
+    read_versioned_index,
+    write_versioned_bucketed_table,
+    write_versioned_index,
 )
 from suggest_spark.plans.session import get_spark
-from suggest_spark.sources.dictionary import read_line_dictionary, write_dictionary
+from suggest_spark.sources.dictionary import read_line_dictionary
 
 
 def index_config_from_description(desc: dict) -> IndexConfig:
@@ -54,28 +67,35 @@ def run_index_job(spark, desc: dict, base_dir: str) -> dict | None:
     source = os.path.join(base_dir, desc["source"])
     out = os.path.join(base_dir, desc.get("output", "db"))
 
-    t0 = time.time()
-    dictionary = read_line_dictionary(spark, source)
     dict_path = os.path.join(out, f"{desc['name']}_dictionary")
-    write_dictionary(dictionary, dict_path)
+    index_path = os.path.join(out, f"{desc['name']}_index")
+    stats_path = f"{index_path}_stats"
+    # refuse an output dir in any other layout before anything is written
+    checked_manifest(spark, dict_path, "bucket")
+    checked_manifest(spark, index_path, "size")
+    grace = SuggestService.gc_min_age_sec
+
+    t0 = time.time()
+    write_versioned_bucketed_table(read_line_dictionary(spark, source), dict_path)
+    dictionary = read_versioned_bucketed_table(spark, dict_path)
     t_dict = time.time() - t0
 
     t0 = time.time()
-    index_path = os.path.join(out, f"{desc['name']}_index")
-    stats_path = f"{index_path}_stats"
-    # a RE-run mutates the index in place: invalidate any stats from the
-    # previous run BEFORE touching it
+    # a RE-run replaces the index: invalidate any stats from the previous
+    # run BEFORE touching it
     invalidate_index_stats(spark, stats_path)
-    index = build_ngram_index(dictionary, config=cfg)
-    write_ngram_index(index, index_path)
+    write_versioned_index(build_ngram_index(dictionary, config=cfg), index_path)
+    index = read_versioned_index(spark, index_path)
     t_index = time.time() - t0
 
     # planner statistics next to the index: the booting service feeds them
     # to suggest_topk_auto so plan selection and the prefix path's
     # term_df/doc_terms/delta_max artifacts cost zero query-time jobs
     t0 = time.time()
-    stats = write_index_stats(spark, index, stats_path)
+    stats = write_index_stats(spark, index, stats_path, min_age_sec=grace)
     t_stats = time.time() - t0
+    for path in (dict_path, index_path):
+        gc_versions(spark, path, min_age_sec=grace)
     return {
         "name": desc["name"],
         "dictionary": dict_path,

@@ -25,9 +25,8 @@ Two interchangeable implementations are provided:
 
 * ``ngram_terms_col`` — a pure Spark SQL Column expression (whole-stage
   codegen, no Python in the hot path): the canonical scale path.
-* ``pandas_tokenizer_udf`` — an Arrow-batched pandas UDF wrapping the pure
-  Python ``tokenize`` (used for parity tests and as the extension point for
-  custom analysis chains, cf. pkg/analysis/tokenizer.go:8-17).
+* ``tokenize`` — the pure Python chain (the hot replica's query side and
+  the oracle the Column expression is tested against).
 
 Both produce identical output (golden-tested against
 pkg/analysis/ngram_tokenizer_test.go:10-55 fixtures).
@@ -37,7 +36,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
@@ -45,7 +43,7 @@ from pyspark.sql.types import ArrayType, StringType
 from ..config import DEFAULT_CONFIG, IndexConfig
 
 # ---------------------------------------------------------------------------
-# Pure Python (oracle / pandas-UDF kernel)
+# Pure Python (oracle / hot-replica query side)
 # ---------------------------------------------------------------------------
 
 
@@ -122,16 +120,6 @@ def ngram_terms_col(
     )
 
 
-def pandas_tokenizer_udf(config: IndexConfig = DEFAULT_CONFIG, head_only: bool = False):
-    """Arrow-batched pandas UDF ``string -> array<string>`` over :func:`tokenize`."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: tokenize(t if t is not None else "", config, head_only))
-
-    return _tok
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle SQL fragment (used by __spark_entry__.oracle_sql)
 # ---------------------------------------------------------------------------
@@ -195,40 +183,3 @@ def sentence_split_col(text: Column, separators: str = ".?!\n") -> Column:
 
 def _escape_for_char_class_local(chars: str) -> str:
     return "".join("\\" + c if c in set("\\^]$.|?*+()[{") else c for c in chars)
-
-
-# P8: stop-word filter + light stemmer (reference: pkg/analysis/
-# stemmer_filter.go:17-49 with generated snowball data — present in the
-# reference but NOT wired into the suggest chain, so ranking parity does not
-# depend on it; provided here as composable column filters).  FULL snowball
-# parity (Porter2 en + ru, snowball stop lists, reference filter semantics)
-# lives in functions/stemmer.py — these lightweight variants stay for
-# pure-Column pipelines that cannot afford a pandas UDF.
-EN_STOP_WORDS = frozenset(
-    "a an and are as at be but by for if in into is it no not of on or such "
-    "that the their then there these they this to was will with".split()
-)
-
-
-def stop_words_filter_col(words: Column, stop_words: frozenset[str] = EN_STOP_WORDS) -> Column:
-    sw = F.array(*[F.lit(w) for w in sorted(stop_words)])
-    return F.filter(words, lambda w: ~F.array_contains(sw, w))
-
-
-_STEM_SUFFIXES = ["ing", "edly", "ed", "ies", "ly", "es", "s"]
-
-
-def light_stem_col(words: Column) -> Column:
-    """Suffix-stripping stemmer (porter-light; the reference embeds a full
-    generated snowball — out of parity scope, cf. SURVEY.md P8)."""
-    # when/otherwise chain built in reverse: first matching suffix in list
-    # order wins; stems only when >= 3 chars remain
-    def stem(word: Column) -> Column:
-        result = word
-        for suf in reversed(_STEM_SUFFIXES):
-            keep_len = F.char_length(word) - len(suf)
-            cond = word.endswith(suf) & (keep_len >= 3)
-            result = F.when(cond, F.substring(word, 1, keep_len)).otherwise(result)
-        return result
-
-    return F.transform(words, stem)

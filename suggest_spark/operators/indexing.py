@@ -7,6 +7,8 @@ relation ``(size int, term string, doc_id long)`` physically partitioned by
 ``size``: the per-segment loop of the reference becomes Catalyst partition
 pruning on a ``size BETWEEN min_y AND max_y`` predicate (the LengthFilter),
 and posting lists are just the exploded relational form grouped by term.
+On disk the index has one layout, written and read only through
+operators/versioned.py.
 
 Duplicate normalized terms for one document are KEPT (the reference appends
 the doc id once per term occurrence, indexer_writer.go:80-84), so overlap
@@ -53,18 +55,6 @@ def build_ngram_index(
         with_terms(dictionary, text_col, config)
         .select(F.col(id_col).alias("doc_id"), "size", F.explode("terms").alias("term"))
     )
-
-
-def write_ngram_index(index_df: DataFrame, path: str) -> None:
-    """Persist the index partitioned by ``size`` for partition pruning
-    (the disk layout analogue of pkg/index/indexer_writer.go:89-145 —
-    Parquet column encodings replace the varint/skip/roaring codecs of
-    pkg/index/codec.go:39-51)."""
-    index_df.write.mode("overwrite").partitionBy("size").parquet(path)
-
-
-def read_ngram_index(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 @dataclass
@@ -131,7 +121,7 @@ def write_index_stats(
       distinct_terms max_df delta_max`` (``delta_max`` = corpus-wide max
       duplicate-gram excess, the prefix-slack constant).
 
-    Run ONCE per index (re)build, next to ``write_ngram_index`` — two
+    Run ONCE per index (re)build, next to ``write_versioned_index`` — two
     aggregate jobs + two columnar writes over data the build already
     shuffled; afterwards every query batch plans against the persisted
     artifacts job-free.  Written through Spark so the artifacts land on
@@ -220,88 +210,3 @@ def read_index_stats(spark, path: str) -> IndexStats:
         **scalars,
     )
 
-
-def upsert_ngram_index(
-    spark,
-    path: str,
-    new_docs: DataFrame,
-    config: IndexConfig = DEFAULT_CONFIG,
-    deleted_ids: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "value",
-) -> dict:
-    """Incrementally maintain a size-partitioned disc index: merge new or
-    re-added documents and drop deleted ones WITHOUT rebuilding untouched
-    ``size=`` partitions.
-
-    The reference can only rebuild an index wholesale (indexer job + hot
-    swap, cmd/suggest/cmd/indexer.go:35-137); at 100 TB a daily trickle of
-    new documents must not re-shuffle the whole corpus.  Spark-native form:
-
-    1. index rows for the incoming docs → the set of AFFECTED sizes, plus
-       the sizes currently holding any incoming or deleted doc id (a
-       re-added doc whose text changed size would otherwise leave stale
-       rows in its old partition) — one column-pruned scan of
-       (doc_id, size);
-    2. partition-pruned read of ONLY those partitions, anti-join out every
-       re-added/deleted doc id, union the fresh rows;
-    3. ``partitionOverwriteMode=dynamic`` overwrite — only the affected
-       ``size=`` directories are replaced; the rest of the index is never
-       read or written.
-
-    The merged slice is pinned with an eager ``localCheckpoint`` before the
-    overwrite because source and target are the same path (a lazy plan
-    would re-read files the write is replacing).  On a transactional table
-    format (Iceberg/Delta — see sources/tables.py) the same plan runs as a
-    MERGE with snapshot isolation and no pin.
-
-    Returns ``{"sizes_touched": [...], "rows_written": int}``.
-    """
-    new_rows = build_ngram_index(new_docs, id_col, text_col, config)
-    sizes = {r["size"] for r in new_rows.select("size").distinct().collect()}
-
-    drop_ids = new_docs.select(F.col(id_col).alias("doc_id"))
-    if deleted_ids is not None:
-        deleted = deleted_ids.select(F.col(deleted_ids.columns[0]).alias("doc_id"))
-        drop_ids = drop_ids.unionByName(deleted)
-    drop_ids = drop_ids.distinct()
-    # sizes currently holding any replaced/deleted id (column-pruned scan)
-    sizes |= {
-        r["size"]
-        for r in read_ngram_index(spark, path)
-        .join(drop_ids, "doc_id")
-        .select("size")
-        .distinct()
-        .collect()
-    }
-
-    sizes = sorted(sizes)
-    if not sizes:
-        return {"sizes_touched": [], "rows_written": 0}
-
-    existing = read_ngram_index(spark, path).where(F.col("size").isin(sizes))
-    kept = existing.join(drop_ids, "doc_id", "left_anti")
-    merged = (
-        kept.select("doc_id", "size", "term")
-        .unionByName(new_rows.select("doc_id", "size", "term"))
-        .localCheckpoint(eager=True)
-    )
-    (
-        merged.write.mode("overwrite")
-        .partitionBy("size")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
-    # dynamic overwrite replaces only partitions PRESENT in the output — an
-    # affected partition whose rows were all dropped must be deleted
-    # explicitly or its stale files would survive (Iceberg's MERGE subsumes
-    # this step on a transactional table).  The delete goes through the
-    # Hadoop FS API and fails loudly: the index path can live on hdfs://
-    # or s3a://, where a local-filesystem delete would silently no-op and
-    # deleted docs would keep being served from the stale partition.
-    from ..sources import fsutil
-
-    surviving = {r["size"] for r in merged.select("size").distinct().collect()}
-    for s in set(sizes) - surviving:
-        fsutil.delete(spark, f"{path}/size={s}")
-    return {"sizes_touched": sizes, "rows_written": merged.count()}

@@ -5,26 +5,27 @@ Dictionary) map swapped atomically under sync.RWMutex, reindexed live via
 SIGHUP/POST, internal/suggest/api/app.go:47-68).
 
 Spark mapping: an index "build" is a DataFrame plan over the dictionary
-table (optionally materialized to a ``partitionBy("size")`` parquet
-warehouse path — the DISC driver; cached in memory — the RAM driver); a
-reindex is a REBUILD + ATOMIC SWAP of the registry entry.  The Python
-``threading.Lock`` only guards the registry dict itself.
+table (materialized to a versioned, size-partitioned warehouse path — the
+DISC driver; cached in memory — the RAM driver); a reindex is a REBUILD +
+ATOMIC SWAP of the registry entry.  The Python ``threading.Lock`` only
+guards the registry dict itself.
 
 Reader isolation: RAM entries are cached immutable lineage, so concurrent
 queries against a swapped-out entry keep their snapshot (the
 reader-isolation the reference needs the RWMutex for).  DISC entries are
-SNAPSHOT-ISOLATED too since round 3: ``add_disc_index``/``upsert_disc_index``
-write a fresh immutable ``v=N`` directory and atomically commit a manifest
-(operators/versioned.py — the reference's build-then-swap, service.go:78-91,
-at the filesystem level), then GC versions older than the previous snapshot
+SNAPSHOT-ISOLATED too: every DISC artifact has one on-disk layout
+(operators/versioned.py) — the index a size-partitioned versioned
+manifest, the dictionary a ``doc_id``-bucketed one — and every mutator
+writes a fresh immutable ``v=N`` directory and atomically commits a
+manifest (the reference's build-then-swap, service.go:78-91, at the
+filesystem level), then GCs versions older than the previous snapshot
 (grace period for in-flight queries).  Nothing a live query has resolved is
 ever modified; a transactional table format (Iceberg/Delta —
 sources/tables.py) would provide the same guarantee catalog-side.
 
-Pre-round-3 FLAT layouts (bare ``size=*`` dirs, e.g. indexer_job output)
-are still readable via ``load_disc_index``/``rebuild=False``; upserting a
-flat entry falls back to the legacy in-place rewrite, which is NOT
-reader-isolated — rebuild once with ``add_disc_index`` to upgrade.
+An entry whose index or dictionary is in any other layout is refused with
+``ValueError`` before anything durable changes; re-run
+``jobs/indexer_job.py`` into a fresh output dir.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, IndexConfig
 from ..functions.metrics import Metric
-from .indexing import IndexStats, build_ngram_index, read_ngram_index, write_ngram_index
+from .indexing import IndexStats, build_ngram_index
 from .suggest import autocomplete_firstk, suggest_topk_auto
 
 #: largest dictionary (rows) admitted into a driver-side value map — shared
@@ -133,7 +134,7 @@ class SuggestService:
 
     ``add_ram_index``   — RAM driver: index plan cached in executor memory.
     ``add_disc_index``  — DISC driver: index written to (or read from) a
-                          size-partitioned parquet path.
+                          versioned, size-partitioned parquet path.
     Re-adding a name REBUILDS and atomically swaps the entry — the hot
     reindex path (service.go:78-91 AddIndex under Lock).
     """
@@ -184,10 +185,10 @@ class SuggestService:
         under concurrent queries (versioned.py); old versions beyond the
         grace window are GC'd after the swap."""
         from .versioned import (
+            checked_manifest,
             gc_versions,
-            is_versioned,
+            read_versioned_bucketed_table,
             read_versioned_index,
-            read_versioned_table,
             write_versioned_bucketed_table,
             write_versioned_index,
         )
@@ -197,9 +198,11 @@ class SuggestService:
             # service-owned dictionary sibling, created by upsert_disc_index
             # for entries registered without a dictionary artifact — when it
             # exists, the on-disk index includes persisted upserts the
-            # caller's dictionary frame knows nothing about
+            # caller's dictionary frame knows nothing about.  Both layouts
+            # are checked before anything durable changes.
             sib = f"{path}_dictionary"
-            has_sib = is_versioned(self.spark, sib)
+            checked_manifest(self.spark, path, "size")
+            has_sib = checked_manifest(self.spark, sib, "bucket") is not None
             if rebuild:
                 # stats describe the OLD snapshot — invalidate on disk BEFORE
                 # the index changes (crash-safe: worst case is missing stats =
@@ -216,30 +219,22 @@ class SuggestService:
                     # NULL values (visible, retry-healed by re-running the
                     # rebuild); index-first would serve the old dictionary's
                     # stale VALUES against the new index, silently wrong.
-                    # Bucketed layout so later trickle upserts copy-on-write
-                    # only touched buckets (an existing manifest's n_buckets
-                    # is reused inside the writer).
                     write_versioned_bucketed_table(dictionary, sib)
                     gc_versions(self.spark, sib, min_age_sec=self.gc_min_age_sec)
                 write_versioned_index(build_ngram_index(dictionary, config=config), path)
-                index = read_versioned_index(self.spark, path)
                 stats = None
             else:
-                if is_versioned(self.spark, path):
-                    index = read_versioned_index(self.spark, path)
-                else:  # pre-versioned flat layout (bare size=* dirs)
-                    index = read_ngram_index(self.spark, path)
                 stats, _ = self._load_stats(stats_path)
                 if has_sib:
                     # serve the persisted post-upsert dictionary, not the
                     # caller's pre-upsert frame — else upserted doc_ids
                     # resolve to null values after a restart
-                    dictionary = read_versioned_table(self.spark, sib)
+                    dictionary = read_versioned_bucketed_table(self.spark, sib)
             self._swap(
                 name,
                 _Entry(
                     dictionary,
-                    index,
+                    read_versioned_index(self.spark, path),
                     config,
                     path,
                     stats=stats,
@@ -263,20 +258,13 @@ class SuggestService:
         the on-disk index is served as-is."""
         import os
 
-        from ..sources.dictionary import read_dictionary
-        from .versioned import is_versioned, read_versioned_index, read_versioned_table
+        from .versioned import read_versioned_bucketed_table, read_versioned_index
 
         with self._mutate:
             dict_path = os.path.join(warehouse_dir, f"{name}_dictionary")
-            if is_versioned(self.spark, dict_path):  # upserted since indexer run
-                dictionary = read_versioned_table(self.spark, dict_path)
-            else:
-                dictionary = read_dictionary(self.spark, dict_path)
+            dictionary = read_versioned_bucketed_table(self.spark, dict_path)
             path = os.path.join(warehouse_dir, f"{name}_index")
-            if is_versioned(self.spark, path):
-                index = read_versioned_index(self.spark, path)
-            else:
-                index = read_ngram_index(self.spark, path)
+            index = read_versioned_index(self.spark, path)
             stats, stats_path = self._load_stats(f"{path}_stats")
             self._swap(
                 name,
@@ -309,20 +297,19 @@ class SuggestService:
         state is patched — the delta collect), so a nondeterministic plan
         (``rand()``, ``current_timestamp()``, a source being appended to)
         can diverge between what the index, the dictionary and the patched
-        hot state each saw.  Flat pre-versioned entries fall back to the
-        legacy in-place :func:`upsert_ngram_index` (NOT reader-isolated).
+        hot state each saw.  An index or dictionary in any other on-disk
+        layout raises ``ValueError`` before anything durable changes.
 
         Durability: the merged dictionary is ALWAYS persisted (versioned,
-        key-bucketed: only buckets holding a changed doc_id are rewritten,
-        ``upsert_versioned_bucketed_table``) — to the entry's ``dict_path``
-        (load_disc_index
-        boots), or to a service-owned sibling at ``{path}_dictionary`` for
-        entries registered with a caller dictionary (add_disc_index), which
-        later re-opens prefer over the caller's frame.  Index and
-        dictionary must change TOGETHER or a restart serves upserted docs
-        with null values.  A crash between the index write and the
-        dictionary write leaves exactly that transient state; the upsert is
-        idempotent, so retrying it heals.
+        ``doc_id``-bucketed: only buckets holding a changed doc_id are
+        rewritten, ``upsert_versioned_bucketed_table``) — to the entry's
+        ``dict_path`` (load_disc_index boots), or to a service-owned sibling
+        at ``{path}_dictionary`` for entries registered with a caller
+        dictionary (add_disc_index), which later re-opens prefer over the
+        caller's frame.  Index and dictionary must change TOGETHER or a
+        restart serves upserted docs with null values.  A crash between the
+        index write and the dictionary write leaves exactly that transient
+        state; the upsert is idempotent, so retrying it heals.
 
         Serving stays HOT across the upsert: when the entry has a warm
         ``value_map`` and/or a :class:`~suggest_spark.serving.replica.
@@ -333,13 +320,11 @@ class SuggestService:
         window of pre-upsert answers.  A larger delta (or a patch that
         would exceed the replica's admitted ``max_postings``) drops the
         hot state as before; re-run :meth:`warm` / :meth:`enable_hot_replica`."""
-        from .indexing import upsert_ngram_index
         from .versioned import (
+            checked_manifest,
             gc_versions,
-            is_versioned,
-            read_manifest,
+            read_versioned_bucketed_table,
             read_versioned_index,
-            read_versioned_table,
             upsert_versioned_bucketed_table,
             upsert_versioned_index,
             write_versioned_bucketed_table,
@@ -367,6 +352,10 @@ class SuggestService:
                     f"{chk['rows']} rows, {chk['nonnull']} non-null, "
                     f"{chk['distinct']} distinct"
                 )
+            dict_path = e.dict_path or f"{e.path}_dictionary"
+            if checked_manifest(self.spark, e.path, "size") is None:
+                raise FileNotFoundError(f"no versioned index at {e.path}")
+            has_dict = checked_manifest(self.spark, dict_path, "bucket") is not None
             # bounded delta collect for hot-state patching — BEFORE any
             # mutation (a failure here leaves the entry untouched, and the
             # collected rows are exactly the frames the upsert below applies)
@@ -377,65 +366,32 @@ class SuggestService:
             # (load_disc_index) must never re-arm pre-upsert stats against the
             # post-upsert index (stale doc_terms ⇒ wrong prefix-plan scores)
             self._invalidate_stats(e.stats_path or f"{e.path}_stats")
-            versioned = is_versioned(self.spark, e.path)
-            if versioned:
-                stats = upsert_versioned_index(
-                    self.spark, e.path, new_docs, e.config, deleted_ids
-                )
-            else:
-                stats = upsert_ngram_index(
-                    self.spark, e.path, new_docs, e.config, deleted_ids
-                )
+            stats = upsert_versioned_index(
+                self.spark, e.path, new_docs, e.config, deleted_ids
+            )
             # persist, then serve the RE-READ — a lineage cut: chaining each
             # upsert's join/union onto the previous in-memory dictionary
             # grows the plan unboundedly across trickle upserts (a cache
             # eviction would recompute the whole chain).  Entries registered
             # without a dictionary artifact (add_disc_index) get a
-            # service-owned versioned sibling at {path}_dictionary: a cache
-            # can't cut lineage and localCheckpoint blocks die with an
-            # executor — only a persisted table survives both, and it is
-            # what makes the upsert durable across restarts (the on-disk
-            # index keeps upserted docs; serving them against a pre-upsert
-            # dictionary would resolve their values to null).
-            #
-            # BUCKETED copy-on-write (round 4): once the sibling is in the
-            # bucketed layout, a trickle upsert rewrites only the buckets
-            # holding a changed doc_id — the index side's per-partition
-            # economics, no more O(dictionary) rewrite per update.  A
-            # missing / flat / round-3-unpartitioned sibling pays ONE full
-            # bucketed write of the merged dictionary (seeded from the
-            # served frame) and is incremental ever after.
-            dict_path = e.dict_path or f"{e.path}_dictionary"
-            dict_bucketed = False
-            if is_versioned(self.spark, dict_path):
-                try:
-                    dict_bucketed = "n_buckets" in read_manifest(self.spark, dict_path)
-                except (FileNotFoundError, ValueError):
-                    dict_bucketed = False
-            if dict_bucketed:
-                upsert_versioned_bucketed_table(
-                    self.spark,
-                    dict_path,
-                    new_docs.select("doc_id", "value"),
-                    deleted_keys=deleted_ids,
-                )
-            else:
-                drop = new_docs.select("doc_id")
-                if deleted_ids is not None:
-                    drop = drop.unionByName(
-                        deleted_ids.select(F.col(deleted_ids.columns[0]).alias("doc_id"))
-                    )
-                merged = e.dictionary.join(
-                    drop.distinct(), "doc_id", "left_anti"
-                ).unionByName(new_docs.select("doc_id", "value"))
-                write_versioned_bucketed_table(merged, dict_path)
+            # service-owned sibling at {path}_dictionary, seeded from the
+            # served frame by their first upsert: a cache can't cut lineage
+            # and localCheckpoint blocks die with an executor — only a
+            # persisted table survives both, and it is what makes the upsert
+            # durable across restarts (the on-disk index keeps upserted
+            # docs; serving them against a pre-upsert dictionary would
+            # resolve their values to null).  Bucketed copy-on-write: a
+            # trickle upsert rewrites only the buckets holding a changed
+            # doc_id.
+            if not has_dict:
+                write_versioned_bucketed_table(e.dictionary, dict_path)
+            upsert_versioned_bucketed_table(
+                self.spark, dict_path, new_docs.select("doc_id", "value"), deleted_ids
+            )
             gc_versions(self.spark, dict_path, min_age_sec=self.gc_min_age_sec)
-            dictionary = read_versioned_table(self.spark, dict_path).cache()
+            dictionary = read_versioned_bucketed_table(self.spark, dict_path).cache()
             dictionary.count()
-            if versioned:
-                index = read_versioned_index(self.spark, e.path)
-            else:
-                index = read_ngram_index(self.spark, e.path)
+            index = read_versioned_index(self.spark, e.path)
             # stats are NOT carried over: the index just changed, and serving
             # the prefix plan against the previous doc_terms would be wrong
             # (_Entry.stats).  stats_path survives so refresh_stats() re-arms.
@@ -491,8 +447,7 @@ class SuggestService:
                     **hot,
                 ),
             )
-            if versioned:
-                gc_versions(self.spark, e.path, min_age_sec=self.gc_min_age_sec)
+            gc_versions(self.spark, e.path, min_age_sec=self.gc_min_age_sec)
             return stats
 
     def rebucket_dictionary(self, name: str, new_n_buckets: int) -> dict:
@@ -512,12 +467,13 @@ class SuggestService:
         grace-period GC reclaims the old ones (a cache eviction after GC
         would otherwise recompute from deleted paths).  Entries that have
         never been upserted have no bucketed sibling yet — that raises
-        (FileNotFoundError / ValueError) rather than inventing one; the
-        first upsert seeds the sibling at the count it needs."""
+        FileNotFoundError rather than inventing one; the first upsert seeds
+        the sibling at the count it needs.  An index or dictionary in any
+        other on-disk layout raises ``ValueError`` before any commit."""
         from .versioned import (
+            checked_manifest,
             gc_versions,
-            read_manifest,
-            read_versioned_table,
+            read_versioned_bucketed_table,
             rebucket_versioned_bucketed_table,
         )
 
@@ -528,8 +484,13 @@ class SuggestService:
                     f"{name!r} is a RAM entry; it has no persisted dictionary"
                 )
             dict_path = e.dict_path or f"{e.path}_dictionary"
-            current = read_manifest(self.spark, dict_path)
-            if "n_buckets" in current and not current["partitions"]:
+            checked_manifest(self.spark, e.path, "size")
+            current = checked_manifest(self.spark, dict_path, "bucket")
+            if current is None:
+                raise FileNotFoundError(
+                    f"{name!r} has no dictionary at {dict_path}; its first upsert creates it"
+                )
+            if not current["partitions"]:
                 # a served dictionary is never empty under the service
                 # contract; refusing BEFORE the commit beats crashing on the
                 # re-read below with the new layout already half-applied.
@@ -540,16 +501,10 @@ class SuggestService:
                     f"{name!r}'s dictionary sibling at {dict_path} is empty; "
                     "reload it before re-bucketing"
                 )
-            # service-created siblings are always doc_id-keyed (every
-            # upsert_disc_index call uses the default key); explicit here so
-            # pre-key-pinning siblings stay rebucketable through this API,
-            # while a manifest pinning anything else still raises.
-            stats = rebucket_versioned_bucketed_table(
-                self.spark, dict_path, new_n_buckets, key_col="doc_id"
-            )
+            stats = rebucket_versioned_bucketed_table(self.spark, dict_path, new_n_buckets)
             if not stats["rebucketed"]:
                 return stats
-            dictionary = read_versioned_table(self.spark, dict_path).cache()
+            dictionary = read_versioned_bucketed_table(self.spark, dict_path).cache()
             dictionary.count()
             self._swap(
                 name,
@@ -727,10 +682,9 @@ class SuggestService:
                 e.dictionary.cache()
             if e.value_map is None and value_map_max_rows > 0:
                 if e.dictionary.count() <= value_map_max_rows:
-                    vm = {
-                        r["doc_id"]: r["value"]
-                        for r in e.dictionary.select("doc_id", "value").collect()
-                    }
+                    # one Arrow batch transfer, not a row-at-a-time collect
+                    pdf = e.dictionary.select("doc_id", "value").toPandas()
+                    vm = dict(zip(pdf["doc_id"].tolist(), pdf["value"].tolist()))
                     e = dataclasses.replace(
                         e, value_map=vm, value_map_max_rows=value_map_max_rows
                     )

@@ -1,49 +1,60 @@
-"""Snapshot-isolated, versioned on-disk n-gram index.
+"""Snapshot-isolated, versioned copy-on-write tables: the on-disk n-gram
+index and the on-disk dictionary.
 
 The reference hot-reindexes by building a fresh in-memory/mmap index and
 swapping the registry pointer under a lock (/root/reference/pkg/suggest/
 service.go:78-91) — readers of the old index keep a consistent snapshot.
-The plain-parquet DISC driver of rounds 1-2 lost that property: rebuild and
-upsert rewrote the live ``size=`` partitions in place, so a concurrent query
-could fail mid-rewrite or read mixed partitions (the one documented
-correctness hazard of round 2).
+This module gives the DISC artifacts the same swap semantics on any Hadoop
+filesystem, without an Iceberg jar, with a miniature manifest-log layout —
+the idea Iceberg/Delta use, specialized to one table shape:
 
-This module restores the reference's swap semantics on any Hadoop
-filesystem, without requiring an Iceberg jar, with a miniature
-manifest-log layout — the same idea Iceberg/Delta use, specialized to one
-table shape:
-
-    <base>/_manifests/v00000001.json   # {"version":1, "partitions":{"7":1}}
+    <base>/_manifests/v00000002.json   # {"version": 2, "partitions": {"7": 1, "9": 2}}
     <base>/v=1/size=7/*.parquet        # data files, IMMUTABLE once written
-    <base>/v=2/size=7/*.parquet        # upsert wrote only the touched size
+    <base>/v=2/size=9/*.parquet        # an upsert wrote only the touched size
 
-* A **manifest** maps each ``size`` partition to the version directory that
-  owns it.  The CURRENT snapshot is the highest-numbered manifest file —
-  committed via temp-file + atomic exclusive rename
-  (fsutil.publish_text_atomic), so a swap is one filesystem metadata
-  operation, readers never see a torn manifest, and concurrent committers
-  of the same version cannot corrupt the log (one wins, one raises).  The
-  commit primitive is pluggable (:func:`set_manifest_committer`) so object
-  stores — where no filesystem op is atomic-exclusive — can inject a
-  conditional-put / catalog-lock commit.
+Each artifact has exactly one layout:
+
+* the **index** ``(doc_id, size, term)`` is partitioned by ``size`` — the
+  reference's length segments (pkg/index/indices.go:3-14);
+* the **dictionary** ``(doc_id, value)`` is partitioned by ``bucket =
+  crc32(doc_id) % n_buckets``, with ``n_buckets`` pinned in every manifest
+  (two writers can never bucket one table two ways; only
+  :func:`rebucket_versioned_bucketed_table` changes it).
+
+Both keep a manifest that maps each partition value to the version
+directory owning it, and share one core: listing, reading the touched
+partitions, anti-join/union merge, writing a fresh ``v=N``, and committing
+the new ownership map.
+
+* The CURRENT snapshot is the highest-numbered manifest — committed via
+  temp-file + atomic exclusive rename (fsutil.publish_text_atomic), so a
+  swap is one filesystem metadata operation, readers never see a torn
+  manifest, and concurrent committers of one version cannot corrupt the log
+  (one wins, one raises).  The commit primitive is pluggable
+  (:func:`set_manifest_committer`) so object stores — where no filesystem
+  op is atomic-exclusive — can inject a conditional-put / catalog-lock
+  commit.
 * **Readers never race writers**: a snapshot resolves to an explicit list
-  of immutable directories at swap time; a rebuild/upsert writes a brand-new
-  ``v=N`` directory and commits a new manifest — nothing a live query has
-  resolved is ever modified.
-* **Upsert stays incremental**: only the touched ``size`` partitions are
-  written into ``v=N``; untouched partitions keep their old owner version in
-  the new manifest (copy-on-write at partition granularity, no data copied).
-  A partition whose rows were all deleted simply has no entry in the new
-  manifest — no rmtree of live directories (the round-2 in-place hazard and
-  its local-FS-only delete are both gone).
-* **GC after a grace period**: ``gc_versions`` keeps every version
+  of immutable directories; a rebuild/upsert writes a brand-new ``v=N``
+  directory and commits a new manifest — nothing a live query has resolved
+  is ever modified.
+* **Upserts are copy-on-write per partition**: only touched partitions are
+  written into ``v=N``; untouched ones keep their owner version in the new
+  manifest.  A partition whose rows were all deleted has no entry in the
+  new manifest.
+* **GC after a grace period**: :func:`gc_versions` keeps every version
   referenced by the latest ``keep_manifests`` manifests (default 2 =
   current + previous), so queries resolved against the previous snapshot
   finish safely; anything older is deleted through the Hadoop FS API.
+* **No other layout is read or written.**  Flat data at ``base`` (bare
+  ``size=*`` dirs or parquet files), an unpartitioned ``{"all": N}``
+  manifest, or a dictionary manifest without ``n_buckets`` makes every
+  reader and writer here raise ``ValueError`` before anything is written;
+  re-run ``jobs/indexer_job.py`` into a fresh output dir.
 
-At 100 TB the manifest is a dict of a few hundred entries (one per size
-segment) — driver-side JSON is the right tool; the data plane stays
-partition-pruned parquet scans exactly as before.
+At 100 TB the manifest is a dict of a few hundred (index) to a few
+thousand (dictionary) entries — driver-side JSON is the right tool; the
+data plane stays partition-pruned parquet scans.
 """
 
 from __future__ import annotations
@@ -74,10 +85,6 @@ def _manifest_path(base: str, version: int) -> str:
 
 def _data_dir(base: str, version: int) -> str:
     return f"{base}/v={version}"
-
-
-def is_versioned(spark: SparkSession, base: str) -> bool:
-    return fsutil.exists(spark, f"{base}/{_MANIFEST_DIR}")
 
 
 def list_manifest_versions(spark: SparkSession, base: str) -> list[int]:
@@ -191,33 +198,125 @@ def _next_version(spark: SparkSession, base: str, floor: int = 0) -> int:
     return highest + 1
 
 
-def _sizes_written(spark: SparkSession, data_dir: str) -> list[int]:
-    """Partition values present in a just-written version dir — from the
-    directory listing, no Spark job."""
-    return sorted(
-        int(n.split("=", 1)[1])
-        for n in fsutil.list_names(spark, data_dir)
-        if n.startswith("size=")
+def checked_manifest(spark: SparkSession, base: str, col: str) -> dict | None:
+    """The current manifest of the table at ``base`` partitioned by ``col``
+    (``"size"``: the index, ``"bucket"``: the dictionary), or ``None`` when
+    nothing is there yet.  Any other layout raises ``ValueError`` — callers
+    run this before they change anything durable."""
+    stray = [
+        n
+        for n in fsutil.list_names(spark, base)
+        if not (n == _MANIFEST_DIR or n.startswith(("v=", ".", "_")))
+    ]
+    if stray:
+        what = f"flat parquet data ({stray[0]})"
+    else:
+        try:
+            manifest = read_manifest(spark, base)
+        except FileNotFoundError:
+            return None
+        if "all" in manifest["partitions"]:
+            what = 'an unpartitioned {"all": N} manifest'
+        elif col == "bucket" and "n_buckets" not in manifest:
+            what = "a manifest without n_buckets"
+        else:
+            return manifest
+    raise ValueError(
+        f"{base} holds {what}, not the versioned {col}-partitioned layout; "
+        "re-run jobs/indexer_job.py into a fresh output dir"
     )
 
 
-def write_versioned_index(index_df: DataFrame, base: str) -> dict:
-    """Full (re)build: write every partition under a fresh ``v=N`` and commit
-    a manifest owning all of them — the snapshot-isolated form of
-    ``indexing.write_ngram_index`` (reference full-rebuild + swap,
-    service.go:78-91).  Returns the committed manifest."""
-    spark = index_df.sparkSession
-    version = _next_version(spark, base)
+def _current(spark: SparkSession, base: str, col: str) -> dict:
+    manifest = checked_manifest(spark, base, col)
+    if manifest is None:
+        raise FileNotFoundError(f"no versioned table at {base}")
+    return manifest
+
+
+# -- the shared copy-on-write core -------------------------------------------
+
+
+def _read_parts(spark: SparkSession, base: str, parts: dict, col: str) -> DataFrame:
+    """An explicit list of immutable partition dirs; ``col`` is parsed from
+    the dir names (``basePath``), so pruning on it still applies."""
+    dirs = [f"{_data_dir(base, v)}/{col}={p}" for p, v in sorted(parts.items())]
+    return spark.read.option("basePath", base).parquet(*dirs).drop("v")
+
+
+def _write_parts(df: DataFrame, base: str, version: int, col: str) -> dict:
+    """Write ``df`` partitioned by ``col`` under the immutable ``v=version``
+    dir; return the ``{partition: version}`` ownership fragment for exactly
+    the partitions that received rows (from the listing, no Spark job)."""
     data_dir = _data_dir(base, version)
-    index_df.select("doc_id", "size", "term").write.mode("errorifexists").partitionBy(
-        "size"
-    ).parquet(data_dir)
+    df.write.mode("errorifexists").partitionBy(col).parquet(data_dir)
+    return {
+        n.split("=", 1)[1]: version
+        for n in fsutil.list_names(df.sparkSession, data_dir)
+        if n.startswith(f"{col}=")
+    }
+
+
+def _rebuild(df: DataFrame, base: str, col: str, floor: int = 0, **pinned) -> dict:
+    """Full write of every partition under a fresh ``v=N`` and a manifest
+    owning all of them (``pinned`` adds layout fields such as
+    ``n_buckets``)."""
+    spark = df.sparkSession
+    version = _next_version(spark, base, floor)
     manifest = {
         "version": version,
-        "partitions": {str(s): version for s in _sizes_written(spark, data_dir)},
+        "partitions": _write_parts(df, base, version, col),
+        **pinned,
     }
     _commit(spark, base, manifest)
     return manifest
+
+
+def _drop_ids(new_rows: DataFrame, deleted: DataFrame | None) -> DataFrame:
+    """Distinct ``doc_id`` of every replaced or deleted row (``deleted``'s
+    first column holds the ids).  A null id matches no row, so it is
+    dropped here rather than touching a partition for nothing."""
+    ids = new_rows.select("doc_id")
+    if deleted is not None:
+        ids = ids.unionByName(deleted.select(F.col(deleted.columns[0]).alias("doc_id")))
+    return ids.where(F.col("doc_id").isNotNull()).distinct()
+
+
+def _upsert(
+    spark: SparkSession,
+    base: str,
+    current: dict,
+    col: str,
+    touched: set[str],
+    drop_ids: DataFrame,
+    new_rows: DataFrame,
+) -> tuple[int, dict]:
+    """Copy-on-write: rewrite the ``touched`` partitions of ``current`` —
+    their rows minus ``drop_ids``, plus ``new_rows`` (which carry ``col``) —
+    under a fresh version, and commit a manifest in which every other
+    partition keeps its owner.  Returns the version and the partitions it
+    wrote."""
+    version = _next_version(spark, base, floor=current["version"])
+    held = {p: v for p, v in current["partitions"].items() if p in touched}
+    merged = new_rows
+    if held:
+        kept = _read_parts(spark, base, held, col).join(drop_ids, "doc_id", "left_anti")
+        merged = kept.select(new_rows.columns).unionByName(new_rows)
+    written = _write_parts(merged, base, version, col)
+    partitions = {p: v for p, v in current["partitions"].items() if p not in touched}
+    _commit(spark, base, {**current, "version": version, "partitions": {**partitions, **written}})
+    return version, written
+
+
+# -- the index: partitioned by size ------------------------------------------
+
+
+def write_versioned_index(index_df: DataFrame, base: str) -> dict:
+    """Full (re)build: write every ``size`` partition under a fresh ``v=N``
+    and commit a manifest owning all of them (reference full-rebuild + swap,
+    service.go:78-91).  Returns the committed manifest."""
+    checked_manifest(index_df.sparkSession, base, "size")
+    return _rebuild(index_df.select("doc_id", "size", "term"), base, "size")
 
 
 def read_versioned_index(
@@ -225,18 +324,13 @@ def read_versioned_index(
 ) -> DataFrame:
     """The index DataFrame for a snapshot (default: current).  The plan reads
     an explicit list of immutable partition directories; ``size`` pruning on
-    a ``size BETWEEN`` predicate still applies (partition values are parsed
-    from the directory names via ``basePath``)."""
+    a ``size BETWEEN`` predicate still applies."""
     if manifest is None:
-        manifest = read_manifest(spark, base)
-    parts = manifest["partitions"]
-    if not parts:
+        manifest = _current(spark, base, "size")
+    if not manifest["partitions"]:
         return spark.createDataFrame([], INDEX_SCHEMA)
-    dirs = [f"{_data_dir(base, v)}/size={s}" for s, v in sorted(parts.items())]
-    return (
-        spark.read.option("basePath", base)
-        .parquet(*dirs)
-        .select("doc_id", "size", "term")
+    return _read_parts(spark, base, manifest["partitions"], "size").select(
+        "doc_id", "size", "term"
     )
 
 
@@ -246,180 +340,72 @@ def upsert_versioned_index(
     new_docs: DataFrame,
     config: IndexConfig = DEFAULT_CONFIG,
     deleted_ids: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "value",
 ) -> dict:
-    """Incremental copy-on-write upsert (the snapshot-isolated form of
-    ``indexing.upsert_ngram_index`` — same merge semantics, same partition
-    pruning, but no in-place rewrite and no checkpoint pin: source and
-    target are different immutable directories).
+    """Incremental copy-on-write upsert of ``(doc_id, value)`` documents: a
+    doc_id already present is replaced, ``deleted_ids`` are removed, and
+    only the touched ``size`` partitions are rewritten.
+
+    The touched set is every size receiving new rows plus every size
+    currently holding a replaced or deleted id — a re-added doc whose text
+    changed size would otherwise leave stale rows in its old partition (one
+    column-pruned scan of the current snapshot).
 
     Returns ``{"version", "sizes_touched", "rows_written"}``.
     """
-    current = read_manifest(spark, base)
-    version = _next_version(spark, base, floor=current["version"])
-
-    new_rows = build_ngram_index(new_docs, id_col, text_col, config)
-    sizes = {r["size"] for r in new_rows.select("size").distinct().collect()}
-
-    drop_ids = new_docs.select(F.col(id_col).alias("doc_id"))
-    if deleted_ids is not None:
-        deleted = deleted_ids.select(F.col(deleted_ids.columns[0]).alias("doc_id"))
-        drop_ids = drop_ids.unionByName(deleted)
-    drop_ids = drop_ids.distinct()
-    # sizes currently holding any replaced/deleted id — a re-added doc whose
-    # text changed size would otherwise leave stale rows in its old
-    # partition (column-pruned scan of the current snapshot)
-    snapshot = read_versioned_index(spark, base, current)
-    sizes |= {
+    current = _current(spark, base, "size")
+    new_rows = build_ngram_index(new_docs, config=config)
+    drop_ids = _drop_ids(new_docs, deleted_ids)
+    held = read_versioned_index(spark, base, current).join(drop_ids, "doc_id")
+    sizes = sorted(
         r["size"]
-        for r in snapshot.join(drop_ids, "doc_id").select("size").distinct().collect()
-    }
-    sizes = sorted(sizes)
+        for r in new_rows.select("size").union(held.select("size")).distinct().collect()
+    )
     if not sizes:
         return {"version": current["version"], "sizes_touched": [], "rows_written": 0}
-
-    kept = snapshot.where(F.col("size").isin(sizes)).join(drop_ids, "doc_id", "left_anti")
-    merged = kept.select("doc_id", "size", "term").unionByName(
-        new_rows.select("doc_id", "size", "term")
+    version, written = _upsert(
+        spark, base, current, "size", {str(s) for s in sizes}, drop_ids, new_rows
     )
-    data_dir = _data_dir(base, version)
-    merged.write.mode("errorifexists").partitionBy("size").parquet(data_dir)
-
-    surviving = set(_sizes_written(spark, data_dir))
-    partitions = {
-        s: v for s, v in current["partitions"].items() if int(s) not in set(sizes)
-    }
-    partitions.update({str(s): version for s in surviving})
-    _commit(spark, base, {"version": version, "partitions": partitions})
     # parquet footer count — no recompute of the merge plan
-    rows_written = spark.read.parquet(data_dir).count() if surviving else 0
+    rows_written = spark.read.parquet(_data_dir(base, version)).count() if written else 0
     return {"version": version, "sizes_touched": sizes, "rows_written": rows_written}
 
 
-def write_versioned_table(df: DataFrame, base: str) -> dict:
-    """Full-replace write of an UNPARTITIONED table under the same manifest
-    protocol: fresh immutable ``v=N`` dir + atomic manifest commit.  Used
-    for small one-shot artifacts; the DICTIONARY artifact uses the bucketed
-    form below, whose upserts are copy-on-write per bucket instead of
-    O(table) per trickle update."""
-    spark = df.sparkSession
-    version = _next_version(spark, base)
-    df.write.mode("errorifexists").parquet(_data_dir(base, version))
-    manifest = {"version": version, "partitions": {"all": version}}
-    _commit(spark, base, manifest)
-    return manifest
-
-
-def read_versioned_table(spark: SparkSession, base: str) -> DataFrame:
-    """Current snapshot of a versioned table — dispatches on the manifest
-    shape, so callers read unpartitioned (round-3) and bucketed (round-4)
-    layouts through one entry point."""
-    manifest = read_manifest(spark, base)
-    if "n_buckets" in manifest:
-        return read_versioned_bucketed_table(spark, base, manifest)
-    return spark.read.parquet(_data_dir(base, manifest["partitions"]["all"]))
-
-
-# -- bucketed copy-on-write tables -------------------------------------------
+# -- the dictionary: partitioned by bucket = crc32(doc_id) % n_buckets --------
 #
-# The index side rewrites only touched ``size=`` partitions per upsert; the
-# dictionary side used to full-rewrite (round-3 verdict's last
-# O(corpus)-per-update path).  Same cure: hash-bucket the table on its key
-# (``bucket = crc32(key) % B`` — a PARTITION column, derivable from the key
-# alone), reuse the manifest's per-partition ownership map, and copy-on-write
-# only the buckets holding a changed key.  ``n_buckets`` is pinned in every
-# manifest at creation — two writers can never bucket one table two ways.
+# ``bucket`` is a pure function of the key, so an upsert maps replaced and
+# deleted ids straight to their buckets — no scan of the current snapshot.
 
 DEFAULT_TABLE_BUCKETS = 64  # tests/local; a 100 TB-corpus dictionary: 4096+
 
 
-def _bucket_col(key_col, n_buckets: int):
-    return (F.crc32(F.col(key_col).cast("string")) % n_buckets).cast("int")
-
-
-def _check_bucket_key(manifest: dict, key_col: str, base: str) -> None:
-    """The manifest pins the bucketing key exactly like ``n_buckets`` — a
-    writer bucketing on a DIFFERENT column would compute touched buckets on
-    the wrong values, leaving replaced/deleted rows stale in their original
-    buckets (silent duplicates on read).  Mismatches raise instead."""
-    stored = manifest.get("key")
-    if stored is not None and stored != key_col:
-        raise ValueError(
-            f"{base} was bucketed on key {stored!r}; writing with "
-            f"key_col={key_col!r} would leave stale rows in {stored!r}-keyed "
-            "buckets — pass the table's own key"
-        )
-
-
-def _buckets_written(spark: SparkSession, data_dir: str) -> list[int]:
-    return sorted(
-        int(n.split("=", 1)[1])
-        for n in fsutil.list_names(spark, data_dir)
-        if n.startswith("bucket=")
+def _bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
+    return df.withColumn(
+        "bucket", (F.crc32(F.col("doc_id").cast("string")) % n_buckets).cast("int")
     )
-
-
-def _write_bucketed_data(
-    df: DataFrame, base: str, version: int, key_col: str, n_buckets: int
-) -> dict:
-    """Write ``df`` (data columns only) bucketed on ``key_col`` under the
-    immutable ``v=version`` dir; return the ``{bucket: version}`` ownership
-    fragment for exactly the buckets that received rows.  The single write
-    path for full builds, upserts and re-layouts — the bucket derivation and
-    write options can never diverge between them."""
-    data_dir = _data_dir(base, version)
-    (
-        df.withColumn("bucket", _bucket_col(key_col, n_buckets))
-        .write.mode("errorifexists")
-        .partitionBy("bucket")
-        .parquet(data_dir)
-    )
-    return {str(b): version for b in _buckets_written(df.sparkSession, data_dir)}
 
 
 def write_versioned_bucketed_table(
-    df: DataFrame,
-    base: str,
-    key_col: str = "doc_id",
-    n_buckets: int = DEFAULT_TABLE_BUCKETS,
+    df: DataFrame, base: str, n_buckets: int = DEFAULT_TABLE_BUCKETS
 ) -> dict:
-    """Full (re)build of a key-bucketed versioned table: every bucket lands
-    under a fresh ``v=N`` and the manifest owns them all.  Later
-    :func:`upsert_versioned_bucketed_table` calls rewrite only touched
-    buckets.  An existing manifest's ``n_buckets`` is reused (a rebuild must
-    not silently re-bucket a table its upserts co-own)."""
-    spark = df.sparkSession
-    try:
-        existing = read_manifest(spark, base)
-    except FileNotFoundError:
-        existing = {}
+    """Full (re)build of a ``doc_id``-bucketed table: every bucket lands
+    under a fresh ``v=N`` and the manifest owns them all.  An existing
+    manifest's ``n_buckets`` is reused (a rebuild must not silently
+    re-bucket a table its upserts co-own)."""
+    existing = checked_manifest(df.sparkSession, base, "bucket") or {}
     n_buckets = existing.get("n_buckets", n_buckets)
-    _check_bucket_key(existing, key_col, base)
-    version = _next_version(spark, base)
-    manifest = {
-        "version": version,
-        "partitions": _write_bucketed_data(df, base, version, key_col, n_buckets),
-        "n_buckets": n_buckets,
-        "key": key_col,
-    }
-    _commit(spark, base, manifest)
-    return manifest
+    return _rebuild(_bucketed(df, n_buckets), base, "bucket", n_buckets=n_buckets)
 
 
 def read_versioned_bucketed_table(
     spark: SparkSession, base: str, manifest: dict | None = None
 ) -> DataFrame:
-    """Current (or given) snapshot of a bucketed table — an explicit list of
-    immutable bucket directories; the layout columns (``v``, ``bucket``) are
-    dropped so readers see exactly the data schema."""
+    """Current (or given) snapshot of a bucketed table, with exactly the
+    data columns (the layout columns ``v`` and ``bucket`` are dropped)."""
     if manifest is None:
-        manifest = read_manifest(spark, base)
-    parts = manifest["partitions"]
-    if not parts:
+        manifest = _current(spark, base, "bucket")
+    if not manifest["partitions"]:
         raise FileNotFoundError(f"versioned bucketed table at {base} is empty")
-    dirs = [f"{_data_dir(base, v)}/bucket={b}" for b, v in sorted(parts.items())]
-    return spark.read.option("basePath", base).parquet(*dirs).drop("v", "bucket")
+    return _read_parts(spark, base, manifest["partitions"], "bucket").drop("bucket")
 
 
 def upsert_versioned_bucketed_table(
@@ -427,179 +413,77 @@ def upsert_versioned_bucketed_table(
     base: str,
     new_rows: DataFrame,
     deleted_keys: DataFrame | None = None,
-    key_col: str = "doc_id",
-    n_buckets: int = DEFAULT_TABLE_BUCKETS,
 ) -> dict:
     """Copy-on-write upsert: rewrite ONLY the buckets holding a replaced or
-    deleted key (plus those receiving new keys); untouched buckets keep
-    their owner version in the new manifest — O(touched buckets) work per
-    trickle update, never O(table).
-
-    Unlike the index upsert, the touched set needs NO scan of the current
-    snapshot: ``bucket`` is a pure function of the key, so replaced and
-    deleted keys map straight to their buckets.
-
-    A missing table is created; a round-3 UNPARTITIONED layout is migrated
-    (one full bucketed rewrite of the merged table — the last such rewrite
-    it will ever pay)."""
-    try:
-        current = read_manifest(spark, base)
-    except FileNotFoundError:
-        current = None
-    if current is not None:
-        _check_bucket_key(current, key_col, base)
-
-    drop_keys = new_rows.select(F.col(key_col).alias(key_col))
-    if deleted_keys is not None:
-        drop_keys = drop_keys.unionByName(
-            deleted_keys.select(F.col(deleted_keys.columns[0]).alias(key_col))
-        )
-    drop_keys = drop_keys.distinct()
-
-    if current is None or "n_buckets" not in current:
-        # create, or one-time migration of an unpartitioned layout
-        old = (
-            read_versioned_table(spark, base).join(drop_keys, key_col, "left_anti")
-            if current is not None
-            else None
-        )
-        merged = new_rows if old is None else old.unionByName(new_rows)
-        manifest = write_versioned_bucketed_table(merged, base, key_col, n_buckets)
-        return {
-            "version": manifest["version"],
-            "buckets_touched": sorted(int(b) for b in manifest["partitions"]),
-            "migrated": current is not None,
-        }
-
+    deleted ``doc_id`` (plus those receiving new ones); untouched buckets
+    keep their owner version — O(touched buckets) work per trickle update,
+    never O(table).  Returns ``{"version", "buckets_touched"}``."""
+    current = _current(spark, base, "bucket")
     n_buckets = current["n_buckets"]
-    version = _next_version(spark, base, floor=current["version"])
-    touched = {
-        r["bucket"]
-        for r in drop_keys.select(_bucket_col(key_col, n_buckets).alias("bucket"))
-        .distinct()
-        .collect()
-    }
+    drop_ids = _drop_ids(new_rows, deleted_keys)
+    touched = sorted(
+        r["bucket"] for r in _bucketed(drop_ids, n_buckets).select("bucket").distinct().collect()
+    )
     if not touched:
-        return {"version": current["version"], "buckets_touched": [], "migrated": False}
-    held = {b: v for b, v in current["partitions"].items() if int(b) in touched}
-    kept_dirs = [f"{_data_dir(base, v)}/bucket={b}" for b, v in sorted(held.items())]
-    if kept_dirs:
-        kept = (
-            spark.read.option("basePath", base)
-            .parquet(*kept_dirs)
-            .drop("v", "bucket")  # bucket is recomputed from the key on write
-            .join(drop_keys, key_col, "left_anti")
-        )
-        merged = kept.select(new_rows.columns).unionByName(new_rows)
-    else:
-        merged = new_rows
-    partitions = {
-        b: v for b, v in current["partitions"].items() if int(b) not in touched
-    }
-    partitions.update(_write_bucketed_data(merged, base, version, key_col, n_buckets))
-    _commit(
+        return {"version": current["version"], "buckets_touched": []}
+    version, _ = _upsert(
         spark,
         base,
-        {
-            "version": version,
-            "partitions": partitions,
-            "n_buckets": n_buckets,
-            "key": current.get("key", key_col),
-        },
+        current,
+        "bucket",
+        {str(b) for b in touched},
+        drop_ids,
+        _bucketed(new_rows, n_buckets),
     )
-    return {"version": version, "buckets_touched": sorted(touched), "migrated": False}
+    return {"version": version, "buckets_touched": touched}
 
 
 def rebucket_versioned_bucketed_table(
-    spark: SparkSession, base: str, new_n_buckets: int, key_col: str | None = None
+    spark: SparkSession, base: str, new_n_buckets: int
 ) -> dict:
     """Online re-layout of a bucketed table whose corpus outgrew its
     creation-time ``n_buckets`` — the table analog of the streaming
-    registry's ``migrate_registry_online`` (streaming/dedup.py), closing the
-    same lifecycle gap: every other mutator deliberately REUSES the pinned
-    bucket count (two writers must never bucket one table two ways), so
-    without this a table created at 64 buckets trickle-upserts into
-    ever-fatter buckets forever.
+    registry's ``migrate_registry_online`` (streaming/dedup.py).  Every other
+    mutator deliberately REUSES the pinned count, so without this a table
+    created at 64 buckets trickle-upserts into ever-fatter buckets forever.
 
-    The versioned layout makes the migration a one-commit swap, with none of
-    the registry's wedge state: the current snapshot is read through its own
-    manifest, rewritten in full under a fresh immutable ``v=N`` with the new
-    bucket count, and a manifest pinning ``new_n_buckets`` is committed
-    atomically (sources/fsutil.py).  Readers holding the old manifest keep
-    reading the old version's immutable dirs (gc grace applies); readers
-    opening after the commit see only the new layout.  Mutators follow the
-    repo's single-maintenance-writer discipline (operators/service.py runs
-    all maintenance on one worker thread); even a racing upsert cannot mix
-    layouts — each manifest pins its OWN ``n_buckets`` and full
+    The current snapshot is rewritten in full under a fresh ``v=N`` at the
+    new count and one manifest pinning ``new_n_buckets`` is committed
+    atomically.  Readers holding the old manifest keep reading the old
+    version's immutable dirs (gc grace applies).  Even a racing upsert
+    cannot mix layouts: each manifest pins its OWN ``n_buckets`` and full
     bucket→version map, so the loser's commit is a superseded but
-    self-consistent snapshot, never a hybrid.
+    self-consistent snapshot, never a hybrid.  An emptied table re-buckets
+    as a pure manifest commit.
 
-    Cost is one full-table rewrite — paid once per growth step, against
-    trickle upserts that each rewrite ``O(table / n_buckets)`` rows; at the
+    Cost is one full-table rewrite — paid once per growth step; at the
     100 TB tier re-bucket when median bucket size crosses the comfortable
     task-input size (e.g. 64 → 4096 as the corpus grows 64×).
-
-    ``key_col`` is normally omitted — the manifest pins the bucketing key
-    and a mismatching explicit one raises.  It is REQUIRED for a
-    pre-key-pinning manifest holding data — even on a same-count call that
-    would do no work: key problems (a wrong explicit key, or a missing one
-    on a keyless layout) fail the maintenance script's FIRST run, never
-    lying dormant behind a no-op until the count actually differs.  An
-    emptied table re-buckets as a pure manifest commit and never pins a
-    caller-supplied key (nothing exists to validate it against).
     """
     if new_n_buckets < 1:
         raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
-    current = read_manifest(spark, base)
-    if "n_buckets" not in current:
-        raise ValueError(
-            f"{base} is not a bucketed table; migrate the unpartitioned "
-            "layout through upsert_versioned_bucketed_table or rebuild with "
-            "write_versioned_bucketed_table first"
-        )
-    stored_key = current.get("key")
-    # key validation runs BEFORE the same-count no-op return: a wrong-key
-    # maintenance script must fail on its first run, not appear validated
-    # until the first call whose count actually differs.
-    if key_col is not None:
-        _check_bucket_key(current, key_col, base)
-    elif stored_key is None and current["partitions"]:
-        # a manifest from before key pinning: every other mutator takes the
-        # caller's explicit key; guessing here would silently RE-KEY the
-        # table (and pin the guess) whenever the guess is wrong.
-        raise ValueError(
-            f"{base}'s manifest does not pin a bucketing key (pre-key-pinning "
-            "layout); pass key_col explicitly to rebucket it"
-        )
+    current = _current(spark, base, "bucket")
     if current["n_buckets"] == new_n_buckets:
-        return {
-            "version": current["version"],
-            "n_buckets": new_n_buckets,
-            "rebucketed": False,
-        }
-    version = _next_version(spark, base, floor=current["version"])
+        return {"version": current["version"], "n_buckets": new_n_buckets, "rebucketed": False}
     if current["partitions"]:
-        key = stored_key if stored_key is not None else key_col
         snapshot = read_versioned_bucketed_table(spark, base, current)
-        partitions = _write_bucketed_data(snapshot, base, version, key, new_n_buckets)
+        manifest = _rebuild(
+            _bucketed(snapshot, new_n_buckets),
+            base,
+            "bucket",
+            floor=current["version"],
+            n_buckets=new_n_buckets,
+        )
     else:
-        # an emptied table (delete-all upsert) has nothing to rewrite, but
-        # the pinned count must still change or the next bulk reload
-        # re-seeds the stale layout.  With no data write to catch a typo, a
-        # caller-supplied key is UNVALIDATABLE here — preserve the stored
-        # key as-is (possibly unpinned) rather than pin an unchecked name
-        # that would wedge every later mutator.
-        key = stored_key
-        partitions = {}
-    manifest = {
-        "version": version,
-        "partitions": partitions,
-        "n_buckets": new_n_buckets,
-    }
-    if key is not None:
-        manifest["key"] = key
-    _commit(spark, base, manifest)
-    return {"version": version, "n_buckets": new_n_buckets, "rebucketed": True}
+        # an emptied table has nothing to rewrite, but the pinned count must
+        # still change or the next bulk reload re-seeds the stale layout
+        manifest = {
+            "version": _next_version(spark, base, floor=current["version"]),
+            "partitions": {},
+            "n_buckets": new_n_buckets,
+        }
+        _commit(spark, base, manifest)
+    return {"version": manifest["version"], "n_buckets": new_n_buckets, "rebucketed": True}
 
 
 def gc_versions(
@@ -624,15 +508,7 @@ def gc_versions(
 
     Single-writer assumption (same as the reference's reindex): concurrent
     REBUILDS of one index are not coordinated — run GC from the maintenance
-    path that owns the index.
-
-    A pre-versioned FLAT layout (bare ``size=*`` dirs at ``base`` — the
-    round-2 format) is treated as version 0: once at least
-    ``keep_manifests`` manifests exist (so the flat data is ≥2 swaps stale)
-    and the age floor has passed, the flat dirs are deleted too — without
-    this, upgrading a flat index via ``add_disc_index(rebuild=True)`` would
-    orphan a full stale copy forever and leave ``spark.read.parquet(base)``
-    facing conflicting ``v=``/``size=`` partition structures."""
+    path that owns the index."""
     import time
 
     now = time.time()
@@ -677,18 +553,6 @@ def gc_versions(
             if v not in referenced and not _young(f"{base}/{name}"):
                 fsutil.delete(spark, f"{base}/{name}")
                 deleted.append(v)
-        elif (
-            name.startswith("size=") or name.endswith(".parquet") or name == "_SUCCESS"
-        ) and len(versions) >= keep_manifests:
-            # pre-versioned flat data (size= dirs for the index, bare parquet
-            # files for a table) — version 0, swept once ≥2 snapshots old AND
-            # the manifest that pushed it out of the grace window has existed
-            # for the full age floor (flat dirs are old by creation time, so
-            # their own mtime says nothing about when they stopped serving)
-            if not _young(f"{base}/{name}") and not _young(
-                _manifest_path(base, versions[-keep_manifests])
-            ):
-                fsutil.delete(spark, f"{base}/{name}")
     for m in versions:
         if m not in kept_manifests:
             fsutil.delete(spark, _manifest_path(base, m))

@@ -171,10 +171,9 @@ def service_from_config(spark, config_path: str, base_dir: str | None = None):
     planner stats are refreshed through the same versioned protocol.  The
     served dictionary is always the lazy line-read of the SOURCE ``.dict``
     file (the dictionary of record, which a reindex never rewrites); the
-    ``<name>_dictionary`` parquet is only a boot artifact for external
-    ``load_disc_index`` consumers — created once here, refreshed offline via
-    ``jobs/indexer_job.py`` (an in-place overwrite from the serving process
-    would yank files from concurrent readers).  Boot opens an existing index
+    ``<name>_dictionary`` versioned table is only a boot artifact for
+    external ``load_disc_index`` consumers — created once here, refreshed
+    offline via ``jobs/indexer_job.py``.  Boot opens an existing index
     snapshot as-is (no rebuild of a 100 TB index on process start) and
     builds only on first run.
     """
@@ -184,8 +183,9 @@ def service_from_config(spark, config_path: str, base_dir: str | None = None):
     from jobs.indexer_job import index_config_from_description
 
     from ..operators.service import SuggestService
+    from ..operators.versioned import write_versioned_bucketed_table
     from ..sources import fsutil
-    from ..sources.dictionary import read_line_dictionary, write_dictionary
+    from ..sources.dictionary import read_line_dictionary
 
     service = SuggestService(spark)
     base = base_dir or os.path.dirname(os.path.abspath(config_path))
@@ -215,7 +215,7 @@ def service_from_config(spark, config_path: str, base_dir: str | None = None):
         if rebuild:
             service.refresh_stats(desc["name"])
             if not fsutil.exists(spark, dict_path):  # create-only boot artifact
-                write_dictionary(dictionary, dict_path)
+                write_versioned_bucketed_table(dictionary, dict_path)
 
     def reindex_job() -> None:
         for desc in _descriptions():

@@ -8,7 +8,9 @@
   single-pass text read — reproducible for a fixed input file.
 * Parquet store (S2): the CDB (constant DB) of the reference maps to a
   ``(doc_id, value)`` parquet table — random access becomes predicate
-  pushdown on doc_id.
+  pushdown on doc_id.  It has one on-disk layout, the ``doc_id``-bucketed
+  versioned table of operators/versioned.py
+  (``write_versioned_bucketed_table`` / ``read_versioned_bucketed_table``).
 * In-memory (S3): ``from_list``.
 """
 
@@ -28,15 +30,6 @@ def read_line_dictionary(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(
         rdd.map(lambda t: (t[1], t[0])), "doc_id long, value string"
     )
-
-
-def write_dictionary(df: DataFrame, path: str) -> None:
-    """S2 sink: the reference's CDB build (pkg/dictionary/helpers.go:52-95)."""
-    df.select("doc_id", "value").write.mode("overwrite").parquet(path)
-
-
-def read_dictionary(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def from_list(spark: SparkSession, values: list[str]) -> DataFrame:

@@ -8,7 +8,6 @@ from suggest_spark.config import DEFAULT_CONFIG, ENGLISH_CONFIG, IndexConfig
 from suggest_spark.functions.analysis import (
     ngram_terms_col,
     ngrams,
-    pandas_tokenizer_udf,
     tokenize,
 )
 
@@ -72,12 +71,3 @@ def test_sql_expression_matches_python(spark, text):
         df = spark.createDataFrame([(text,)], "value string")
         got = df.select(ngram_terms_col(F.col("value"), cfg).alias("t")).first()["t"]
         assert got == tokenize(text, cfg), (text, cfg)
-
-
-def test_pandas_udf_matches_python(spark):
-    texts = ["Nissan ma", "Toyota Mark II", "жигули", "", "ab ab-", "  x  "]
-    df = spark.createDataFrame([(t,) for t in texts], "value string")
-    tok = pandas_tokenizer_udf(DEFAULT_CONFIG)
-    rows = df.select("value", tok("value").alias("t")).collect()
-    for r in rows:
-        assert r["t"] == tokenize(r["value"], DEFAULT_CONFIG)

@@ -1,21 +1,19 @@
-"""Incremental disc-index maintenance (upsert_ngram_index) and the service
-trickle-reindex path: only affected size partitions rewritten, final state
-identical to a from-scratch rebuild."""
+"""Incremental disc-index maintenance (upsert_versioned_index) and the
+service trickle-reindex path: only affected size partitions rewritten, final
+state identical to a from-scratch rebuild."""
 
 import glob
 import os
 
-from pyspark.sql import functions as F
-
-from suggest_spark.config import DEFAULT_CONFIG
 from suggest_spark.functions.metrics import JACCARD
-from suggest_spark.operators.indexing import (
-    build_ngram_index,
-    read_ngram_index,
-    upsert_ngram_index,
-    write_ngram_index,
-)
+from suggest_spark.operators.indexing import build_ngram_index
 from suggest_spark.operators.service import SuggestService
+from suggest_spark.operators.versioned import (
+    read_manifest,
+    read_versioned_index,
+    upsert_versioned_index,
+    write_versioned_index,
+)
 
 BASE = [
     (0, "Nissan March"),
@@ -37,14 +35,14 @@ def _rows(df):
 def _part_files(path):
     return {
         p: os.stat(p).st_mtime_ns
-        for p in glob.glob(os.path.join(path, "size=*", "*.parquet"))
+        for p in glob.glob(os.path.join(path, "v=*", "size=*", "*.parquet"))
     }
 
 
 def test_upsert_matches_full_rebuild(spark, tmp_path):
     path = str(tmp_path / "idx")
     dictionary = spark.createDataFrame(BASE, "doc_id long, value string")
-    write_ngram_index(build_ngram_index(dictionary), path)
+    write_versioned_index(build_ngram_index(dictionary), path)
     before = _part_files(path)
 
     # new doc, a replacement that CHANGES the doc's size, and a deletion
@@ -52,7 +50,7 @@ def test_upsert_matches_full_rebuild(spark, tmp_path):
         [(6, "Mazda Demio"), (3, "Toyota")], "doc_id long, value string"
     )
     deleted = spark.createDataFrame([(4,)], "doc_id long")
-    stats = upsert_ngram_index(spark, path, new_docs, deleted_ids=deleted)
+    stats = upsert_versioned_index(spark, path, new_docs, deleted_ids=deleted)
     assert stats["rows_written"] > 0
 
     final_dict = spark.createDataFrame(
@@ -60,12 +58,13 @@ def test_upsert_matches_full_rebuild(spark, tmp_path):
          (3, "Toyota"), (5, "ab"), (6, "Mazda Demio")],
         "doc_id long, value string",
     )
-    assert _rows(read_ngram_index(spark, path)) == _rows(
+    assert _rows(read_versioned_index(spark, path)) == _rows(
         build_ngram_index(final_dict)
     )
 
-    # the size partition holding only doc 5 was untouched: same files, same
-    # mtimes (proof the merge pruned to affected partitions)
+    # the size partition holding only doc 5 was untouched: the new manifest
+    # still points it at v=1, whose files keep their mtimes (proof the merge
+    # pruned to affected partitions)
     doc5_size = build_ngram_index(
         spark.createDataFrame([(5, "ab")], "doc_id long, value string")
     ).first()["size"]
@@ -75,6 +74,7 @@ def test_upsert_matches_full_rebuild(spark, tmp_path):
     for p, t in untouched.items():
         assert after.get(p) == t, f"untouched partition rewritten: {p}"
     assert doc5_size not in stats["sizes_touched"]
+    assert read_manifest(spark, path)["partitions"][str(doc5_size)] == 1
 
 
 def test_service_upsert_disc_index(spark, tmp_path):
@@ -110,7 +110,7 @@ def test_randomized_upsert_sequence_matches_rebuild(spark, tmp_path):
 
     state = {i: rand_value() for i in range(30)}
     path = str(tmp_path / "ridx")
-    write_ngram_index(
+    write_versioned_index(
         build_ngram_index(
             spark.createDataFrame(sorted(state.items()), "doc_id long, value string")
         ),
@@ -123,7 +123,7 @@ def test_randomized_upsert_sequence_matches_rebuild(spark, tmp_path):
         new_docs = [(int(i), rand_value()) for i in new_ids]
         victims = [int(i) for i in rng.choice(sorted(state), size=2, replace=False)
                    if int(i) not in {i for i, _ in new_docs}]
-        upsert_ngram_index(
+        upsert_versioned_index(
             spark,
             path,
             spark.createDataFrame(new_docs, "doc_id long, value string"),
@@ -138,4 +138,4 @@ def test_randomized_upsert_sequence_matches_rebuild(spark, tmp_path):
         want = build_ngram_index(
             spark.createDataFrame(sorted(state.items()), "doc_id long, value string")
         )
-        assert _rows(read_ngram_index(spark, path)) == _rows(want)
+        assert _rows(read_versioned_index(spark, path)) == _rows(want)

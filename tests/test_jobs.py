@@ -28,6 +28,10 @@ def _read_kgm(path_glob: str) -> set:
 
 def test_indexer_job_reference_config(spark, tmp_path):
     from jobs.indexer_job import run_index_job
+    from suggest_spark.operators.versioned import (
+        read_versioned_bucketed_table,
+        read_versioned_index,
+    )
 
     shutil.copy(f"{REF}/pkg/suggest/testdata/cars.dict", tmp_path / "cars.dict")
     descs = json.load(open(f"{REF}/pkg/suggest/testdata/config.json"))
@@ -39,9 +43,9 @@ def test_indexer_job_reference_config(spark, tmp_path):
     res = run_index_job(spark, cars, str(tmp_path))
     assert res["name"] == "cars"
 
-    dictionary = spark.read.parquet(res["dictionary"])
+    dictionary = read_versioned_bucketed_table(spark, res["dictionary"])
     assert dictionary.count() == 5066  # cars.dict line count
-    index = spark.read.parquet(res["index"])
+    index = read_versioned_index(spark, res["index"])
     # size-partitioned layout: the ngram_index_test.go:15-40 golden — doc 2's
     # value "Мазда мазда" has its trigram postings present under its size
     assert index.select("size").distinct().count() > 1
@@ -129,7 +133,11 @@ def test_lm_config_separators_are_alphabet_declarations():
 def test_service_boots_from_indexer_job_output(spark, tmp_path):
     """Full loop: reference-format indexer config -> indexer_job artifacts ->
     SuggestService.load_disc_index -> query, with the index config carried
-    from the same IndexDescription."""
+    from the same IndexDescription.  Re-running the indexer over the same
+    output while the entry serves never fails a read: the re-run commits new
+    versions beside the served snapshot, which a fresh boot then picks up."""
+    import threading
+
     from jobs.indexer_job import index_config_from_description, run_index_job
     from suggest_spark.functions.metrics import JACCARD
     from suggest_spark.operators.service import SuggestService
@@ -143,10 +151,44 @@ def test_service_boots_from_indexer_job_output(spark, tmp_path):
     }
     run_index_job(spark, desc, str(tmp_path))
 
+    cfg = index_config_from_description(desc)
     svc = SuggestService(spark)
-    svc.load_disc_index("cars", str(tmp_path / "db"), index_config_from_description(desc))
+    svc.load_disc_index("cars", str(tmp_path / "db"), cfg)
     got = svc.suggest("cars", "Nissan ma", JACCARD, 0.5, 2)
     assert [v for _, v in got] == ["Nissan Maxima", "Nissan March"]
+
+    with open(tmp_path / "cars.dict", "w") as f:
+        f.write("Mazda Demio\nNissan Juke\nNissan Maxima\nToyota Corolla\n")
+    reads, errors = [], []
+    done = threading.Event()
+
+    def reader():
+        while True:
+            try:
+                reads.append(svc.suggest("cars", "Nissan ma", JACCARD, 0.5, 2))
+            except Exception as e:  # any failure is the bug under test
+                errors.append(e)
+            if done.is_set():
+                return
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        run_index_job(spark, desc, str(tmp_path))
+    finally:
+        done.set()
+        t.join(timeout=300)
+    assert not t.is_alive()
+    assert errors == [] and reads
+    # the live entry kept its own snapshot throughout
+    assert all([v for _, v in r] == ["Nissan Maxima", "Nissan March"] for r in reads)
+
+    svc.load_disc_index("cars", str(tmp_path / "db"), cfg)
+    assert [v for _, v in svc.suggest("cars", "Mazda Demio", JACCARD, 0.5, 2)] == [
+        "Mazda Demio"
+    ]
+    got = svc.suggest("cars", "Nissan ma", JACCARD, 0.5, 2)
+    assert [v for _, v in got] == ["Nissan Maxima"]
 
 
 def test_warm_service_warms_all_and_tolerates_oversized_entries():

@@ -291,23 +291,3 @@ def test_checkpoint_resume(spark, pages, tmp_path_factory):
     # ... so the downstream stage's lineage still matches and it SKIPS —
     # checksum-lineage recovery, not blind re-run of everything downstream
     assert skipped["clusters"]
-
-
-def test_salt_spreads_identical_rows_across_partitions(spark):
-    """A hot key made of BYTE-IDENTICAL rows spread over many input
-    partitions must land on multiple salts (regression: content-only
-    hashing gave all of them one salt, re-creating the skew)."""
-    from suggest_spark.linkage.salting import _salt_col, salted_count
-
-    df = (
-        spark.range(0, 2000, 1, 16)
-        .select(F.lit("hot").alias("term"))
-    )
-    n_salts = (
-        df.withColumn("_s", _salt_col(df, None, 16)).select("_s").distinct().count()
-    )
-    assert n_salts > 1
-    out = salted_count(df, "term", n_salts=16)
-    assert out.collect() == [("hot", 2000)] or [
-        (r["term"], r["cnt"]) for r in out.collect()
-    ] == [("hot", 2000)]

@@ -6,13 +6,9 @@ from pyspark.sql import functions as F
 
 from suggest_spark.config import DEFAULT_CONFIG
 from suggest_spark.functions.metrics import JACCARD
-from suggest_spark.linkage.salting import salted_broadcast_join, salted_count
-from suggest_spark.operators.indexing import (
-    build_ngram_index,
-    read_ngram_index,
-    write_ngram_index,
-)
+from suggest_spark.operators.indexing import build_ngram_index
 from suggest_spark.operators.suggest import suggest_topk
+from suggest_spark.operators.versioned import read_versioned_index, write_versioned_index
 
 CARS8 = [
     "Nissan March", "Nissan Juke", "Nissan Maxima", "Nissan Murano",
@@ -34,9 +30,9 @@ def test_partition_pruning_on_size(spark, tmp_path):
     pkg/index/indices.go:3-14)."""
     d = spark.createDataFrame(list(enumerate(CARS8)), "doc_id long, value string")
     path = str(tmp_path / "index")
-    write_ngram_index(build_ngram_index(d, config=DEFAULT_CONFIG), path)
+    write_versioned_index(build_ngram_index(d, config=DEFAULT_CONFIG), path)
 
-    index = read_ngram_index(spark, path)
+    index = read_versioned_index(spark, path)
     q = spark.createDataFrame([(0, "Nissan ma")], "query_id long, query string")
     out = suggest_topk(index, q, JACCARD, 0.5, 2, DEFAULT_CONFIG)
     assert [r["doc_id"] for r in out.collect()] == [2, 0]
@@ -72,23 +68,3 @@ def test_column_pruning_reaches_scan(spark, tmp_path):
     plan = _plan(df)
     assert "ReadSchema: struct<id:bigint,a:bigint>" in plan
     assert "PushedFilters: [IsNotNull(a), GreaterThan(a,10)]" in plan
-
-
-def test_salted_count_equivalence(spark):
-    rows = [("hot",)] * 500 + [("cold%d" % i,) for i in range(50)]
-    df = spark.createDataFrame(rows, "k string")
-    got = {r["k"]: r["cnt"] for r in salted_count(df, "k", n_salts=8).collect()}
-    assert got["hot"] == 500
-    assert got["cold7"] == 1
-    assert len(got) == 51
-
-
-def test_salted_broadcast_join_equivalence(spark):
-    big = spark.createDataFrame(
-        [("hot", i) for i in range(300)] + [("cold", i) for i in range(5)],
-        "k string, v int",
-    )
-    small = spark.createDataFrame([("hot", 1), ("cold", 2)], "k string, tag int")
-    got = salted_broadcast_join(big, small, "k").collect()
-    want = big.join(small, "k").collect()
-    assert sorted(map(str, got)) == sorted(map(str, want))

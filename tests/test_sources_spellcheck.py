@@ -7,11 +7,10 @@ from pyspark.sql import functions as F
 from suggest_spark.config import DEFAULT_CONFIG, IndexConfig
 from suggest_spark.functions.analysis import (
     alphabet_word_tokens_col,
-    light_stem_col,
     sentence_split_col,
-    stop_words_filter_col,
     word_tokens_col,
 )
+from suggest_spark.functions.stemmer import snowball_stem_filter
 from suggest_spark.operators.indexing import build_ngram_index
 from suggest_spark.operators.lm import (
     build_ngram_counts,
@@ -20,12 +19,11 @@ from suggest_spark.operators.lm import (
     write_google_ngram_format,
 )
 from suggest_spark.operators.spellcheck import predict
-from suggest_spark.sources.dictionary import (
-    from_list,
-    read_dictionary,
-    read_line_dictionary,
-    write_dictionary,
+from suggest_spark.operators.versioned import (
+    read_versioned_bucketed_table,
+    write_versioned_bucketed_table,
 )
+from suggest_spark.sources.dictionary import from_list, read_line_dictionary
 
 CORPUS = [
     "i am sam",
@@ -45,8 +43,8 @@ def test_line_dictionary_ids_follow_line_order(spark, tmp_path):
 def test_dictionary_parquet_roundtrip(spark, tmp_path):
     d = from_list(spark, ["x", "y"])
     path = str(tmp_path / "dict")
-    write_dictionary(d, path)
-    back = read_dictionary(spark, path)
+    write_versioned_bucketed_table(d, path)
+    back = read_versioned_bucketed_table(spark, path)
     assert sorted((r["doc_id"], r["value"]) for r in back.collect()) == [(0, "x"), (1, "y")]
 
 
@@ -166,13 +164,12 @@ def test_analysis_filters(spark):
     words = alphabet_word_tokens_col(F.col("text"))
     row = df.select(
         words.alias("w"),
-        stop_words_filter_col(words).alias("nostop"),
-        light_stem_col(words).alias("stems"),
+        snowball_stem_filter(words).alias("stems"),
         sentence_split_col(F.col("text")).alias("sents"),
     ).first()
     assert row["w"][:3] == ["the", "cats", "were"]
-    assert "the" not in row["nostop"] and "and" not in row["nostop"]
-    assert "runn" in row["stems"] or "running" not in row["stems"]
+    assert "the" not in row["stems"] and "and" not in row["stems"]
+    assert "run" in row["stems"] and "cat" in row["stems"]
     assert row["sents"] == [
         "The cats were running; dogs ran",
         "And fish swim",

@@ -16,7 +16,6 @@ from suggest_spark.operators.indexing import (
     build_ngram_index,
     read_index_stats,
     write_index_stats,
-    write_ngram_index,
 )
 from suggest_spark.operators.suggest import (
     select_suggest_plan,
@@ -24,6 +23,7 @@ from suggest_spark.operators.suggest import (
     suggest_topk_auto,
     term_document_frequency,
 )
+from suggest_spark.operators.versioned import read_versioned_index, write_versioned_index
 
 
 def test_select_suggest_plan_unit():
@@ -60,7 +60,7 @@ def stats_fixture(spark, tmp_path_factory):
         list(enumerate(VALUES)), "doc_id long, value string"
     )
     index = build_ngram_index(dictionary, config=DEFAULT_CONFIG)
-    write_ngram_index(index, f"{base}/index")
+    write_versioned_index(index, f"{base}/index")
     written = write_index_stats(spark, index, f"{base}/stats")
     return dictionary, base, written
 
@@ -88,7 +88,7 @@ def test_index_stats_roundtrip(spark, stats_fixture):
 
 def test_auto_parity_and_job_free_planning(spark, stats_fixture):
     _, base, _ = stats_fixture
-    index = spark.read.parquet(f"{base}/index")
+    index = read_versioned_index(spark, f"{base}/index")
     st = read_index_stats(spark, f"{base}/stats")
     queries = spark.createDataFrame(
         [(0, "nissan model 1"), (1, "tayota mark 3"), (2, "honda fitt")],
@@ -133,7 +133,7 @@ def test_concurrent_prefix_queries_during_stats_refresh(spark, stats_fixture):
     import threading
 
     _, base, _ = stats_fixture
-    index = spark.read.parquet(f"{base}/index")
+    index = read_versioned_index(spark, f"{base}/index")
     dictionary = spark.createDataFrame(
         list(enumerate(VALUES)), "doc_id long, value string"
     )

@@ -8,11 +8,9 @@ import pytest
 from suggest_spark.operators.versioned import (
     read_manifest,
     read_versioned_bucketed_table,
-    read_versioned_table,
     rebucket_versioned_bucketed_table,
     upsert_versioned_bucketed_table,
     write_versioned_bucketed_table,
-    write_versioned_table,
 )
 from suggest_spark.sources import fsutil
 
@@ -29,9 +27,8 @@ def test_bucketed_roundtrip_and_dispatch(spark, tmp_path):
     df = spark.createDataFrame(ROWS, SCHEMA)
     m = write_versioned_bucketed_table(df, base, n_buckets=8)
     assert m["n_buckets"] == 8 and m["version"] == 1
-    assert _vals(read_versioned_bucketed_table(spark, base)) == sorted(ROWS)
-    # generic reader dispatches on the manifest shape
-    got = read_versioned_table(spark, base)
+    # readers see exactly the data columns, not the layout ones
+    got = read_versioned_bucketed_table(spark, base)
     assert got.columns == ["doc_id", "value"] and _vals(got) == sorted(ROWS)
 
 
@@ -43,7 +40,7 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     new = spark.createDataFrame([(3, "replaced 3"), (100, "new 100")], SCHEMA)
     deleted = spark.createDataFrame([(7,)], "doc_id long")
     stats = upsert_versioned_bucketed_table(spark, base, new, deleted_keys=deleted)
-    assert stats["version"] == 2 and not stats["migrated"]
+    assert stats["version"] == 2
     # only the buckets of doc_ids {3, 100, 7} were written into v=2 —
     # the copy-on-write proof, from the new version's own directory listing
     v2_buckets = {
@@ -61,7 +58,7 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         [(i, f"value {i}") for i in range(40) if i not in (3, 7)]
         + [(3, "replaced 3"), (100, "new 100")]
     )
-    assert _vals(read_versioned_table(spark, base)) == expect
+    assert _vals(read_versioned_bucketed_table(spark, base)) == expect
     # previous snapshot still fully readable (grace period)
     old = read_versioned_bucketed_table(spark, base, read_manifest(spark, base, 1))
     assert _vals(old) == sorted(ROWS)
@@ -78,35 +75,16 @@ def test_bucketed_upsert_noop_and_emptied_bucket(spark, tmp_path):
         spark, base, spark.createDataFrame([], SCHEMA)
     )
     assert none["buckets_touched"] == [] and none["version"] == 1
-    # deleting a bucket's only key removes the bucket from the manifest
+    # deleting a bucket's only key removes the bucket from the manifest (a
+    # null key deletes nothing and touches no bucket)
     gone = upsert_versioned_bucketed_table(
         spark,
         base,
         spark.createDataFrame([], SCHEMA),
-        deleted_keys=spark.createDataFrame([(0,)], "doc_id long"),
+        deleted_keys=spark.createDataFrame([(0,), (None,)], "doc_id long"),
     )
-    assert gone["version"] == 2
-    assert _vals(read_versioned_table(spark, base)) == [(1, "b")]
-
-
-def test_unpartitioned_layout_migrates_once_then_incremental(spark, tmp_path):
-    """A round-3 full-replace table (partitions == {'all': v}) upserted
-    through the bucketed API pays ONE full bucketed rewrite and is
-    copy-on-write from then on."""
-    base = str(tmp_path / "tbl")
-    write_versioned_table(spark.createDataFrame(ROWS, SCHEMA), base)
-    first = upsert_versioned_bucketed_table(
-        spark, base, spark.createDataFrame([(0, "replaced 0")], SCHEMA), n_buckets=8
-    )
-    assert first["migrated"] and read_manifest(spark, base)["n_buckets"] == 8
-    second = upsert_versioned_bucketed_table(
-        spark, base, spark.createDataFrame([(1, "replaced 1")], SCHEMA)
-    )
-    assert not second["migrated"] and len(second["buckets_touched"]) == 1
-    expect = sorted(
-        [(i, f"value {i}") for i in range(2, 40)] + [(0, "replaced 0"), (1, "replaced 1")]
-    )
-    assert _vals(read_versioned_table(spark, base)) == expect
+    assert gone["version"] == 2 and len(gone["buckets_touched"]) == 1
+    assert _vals(read_versioned_bucketed_table(spark, base)) == [(1, "b")]
 
 
 def test_rebuild_reuses_pinned_bucket_count(spark, tmp_path):
@@ -136,7 +114,7 @@ def test_service_dictionary_upsert_is_bucket_granular(spark, tmp_path):
     )
     svc.add_disc_index("cars", dictionary, base)
 
-    # upsert #1 creates the bucketed sibling (one full write, seeded)
+    # upsert #1 seeds the bucketed sibling from the served dictionary
     svc.upsert_disc_index(
         "cars", spark.createDataFrame([(100, "Mazda Demio")], SCHEMA)
     )
@@ -252,7 +230,7 @@ def test_rebucket_online_relayout(spark, tmp_path):
     expect = sorted(
         [(i, f"value {i}") for i in range(40) if i != 3] + [(3, "replaced 3")]
     )
-    assert _vals(read_versioned_table(spark, base)) == expect
+    assert _vals(read_versioned_bucketed_table(spark, base)) == expect
     # pre-rebucket snapshot still fully readable through ITS manifest
     old = read_versioned_bucketed_table(spark, base, read_manifest(spark, base, 2))
     assert _vals(old) == expect
@@ -262,8 +240,8 @@ def test_rebucket_online_relayout(spark, tmp_path):
     up = upsert_versioned_bucketed_table(
         spark, base, spark.createDataFrame([(200, "new 200")], SCHEMA)
     )
-    assert len(up["buckets_touched"]) == 1 and not up["migrated"]
-    assert _vals(read_versioned_table(spark, base)) == sorted(expect + [(200, "new 200")])
+    assert len(up["buckets_touched"]) == 1
+    assert _vals(read_versioned_bucketed_table(spark, base)) == sorted(expect + [(200, "new 200")])
     # ...and a rebuild keeps the rebucketed count, not its own ask
     m2 = write_versioned_bucketed_table(
         spark.createDataFrame(ROWS, SCHEMA), base, n_buckets=4
@@ -273,91 +251,23 @@ def test_rebucket_online_relayout(spark, tmp_path):
 
 def test_rebucket_noop_key_preservation_and_errors(spark, tmp_path):
     base = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "term long, value string")
-    write_versioned_bucketed_table(df, base, key_col="term", n_buckets=4)
+    df = spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA)
+    write_versioned_bucketed_table(df, base, n_buckets=4)
 
     same = rebucket_versioned_bucketed_table(spark, base, 4)
     assert not same["rebucketed"] and same["version"] == 1  # no new commit
 
     stats = rebucket_versioned_bucketed_table(spark, base, 8)
-    m = read_manifest(spark, base)
-    assert stats["rebucketed"] and m["key"] == "term"  # key pinned across
-    # the preserved key still gates mutators after the re-layout
-    with pytest.raises(ValueError, match="bucketed on key 'term'"):
-        upsert_versioned_bucketed_table(
-            spark, base, spark.createDataFrame([(1, "A")], "term long, value string")
-        )
-    # key validation fires even on a same-count call — a wrong-key script
-    # must fail on its FIRST run, not pass as a no-op until the count differs
-    with pytest.raises(ValueError, match="bucketed on key 'term'"):
-        rebucket_versioned_bucketed_table(spark, base, 8, key_col="doc_id")
+    assert stats["rebucketed"] and read_manifest(spark, base)["n_buckets"] == 8
+    # the doc_id bucketing key carries across: an upsert after the re-layout
+    # replaces the row in place, no stale copy left in its old bucket
+    upsert_versioned_bucketed_table(spark, base, spark.createDataFrame([(1, "A")], SCHEMA))
+    assert _vals(read_versioned_bucketed_table(spark, base)) == [(1, "A"), (2, "b")]
 
     with pytest.raises(ValueError, match="new_n_buckets"):
         rebucket_versioned_bucketed_table(spark, base, 0)
-    flat = str(tmp_path / "flat")
-    write_versioned_table(spark.createDataFrame([(0, "a")], SCHEMA), flat)
-    with pytest.raises(ValueError, match="not a bucketed table"):
-        rebucket_versioned_bucketed_table(spark, flat, 8)
-
-
-def test_bucketed_key_mismatch_raises(spark, tmp_path):
-    """The manifest pins the bucketing key (like n_buckets): writing or
-    upserting with a different key_col must raise, not silently compute
-    touched buckets on the wrong column (stale rows in the old buckets)."""
-    base = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "term long, value string")
-    write_versioned_bucketed_table(df, base, key_col="term", n_buckets=4)
-
-    more = spark.createDataFrame([(1, "A")], "term long, value string")
-    with pytest.raises(ValueError, match="bucketed on key 'term'"):
-        upsert_versioned_bucketed_table(spark, base, more)  # default doc_id
-    with pytest.raises(ValueError, match="bucketed on key 'term'"):
-        write_versioned_bucketed_table(df, base, key_col="value")
-    # the table's own key still works
-    upsert_versioned_bucketed_table(spark, base, more, key_col="term")
-    got = sorted(
-        (r["term"], r["value"])
-        for r in read_versioned_bucketed_table(spark, base).collect()
-    )
-    assert got == [(1, "A"), (2, "b")]
-
-
-def test_rebucket_keyless_manifest_requires_explicit_key(spark, tmp_path):
-    """A pre-key-pinning manifest (no 'key' field) must not be re-bucketed on
-    a GUESSED key — a wrong guess would silently re-key the table and pin the
-    guess.  Rebucket raises without an explicit key_col, and re-pins the
-    caller's key when given one (like every other mutator on such layouts)."""
-    import json
-    import pathlib
-
-    base = str(tmp_path / "tbl")
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "term long, value string"
-    )
-    write_versioned_bucketed_table(df, base, key_col="term", n_buckets=2)
-    mp = pathlib.Path(base) / "_manifests" / "v00000001.json"
-    m = json.loads(mp.read_text())
-    del m["key"]  # simulate the pre-key-pinning era
-    mp.write_text(json.dumps(m, sort_keys=True))
-
-    with pytest.raises(ValueError, match="pass key_col explicitly"):
-        rebucket_versioned_bucketed_table(spark, base, 8)
-    # ...including on a same-count call: a key-less maintenance script must
-    # fail its FIRST run, not hide behind the no-op until the count differs
-    with pytest.raises(ValueError, match="pass key_col explicitly"):
-        rebucket_versioned_bucketed_table(spark, base, 2)
-    stats = rebucket_versioned_bucketed_table(spark, base, 8, key_col="term")
-    assert stats["rebucketed"]
-    m2 = read_manifest(spark, base)
-    assert m2["key"] == "term" and m2["n_buckets"] == 8
-    got = sorted(
-        (r["term"], r["value"])
-        for r in read_versioned_bucketed_table(spark, base).collect()
-    )
-    assert got == [(1, "a"), (2, "b"), (3, "c")]
-    # once pinned, a mismatching explicit key_col is rejected up front
-    with pytest.raises(ValueError, match="bucketed on key 'term'"):
-        rebucket_versioned_bucketed_table(spark, base, 16, key_col="doc_id")
+    with pytest.raises(FileNotFoundError):
+        rebucket_versioned_bucketed_table(spark, str(tmp_path / "missing"), 8)
 
 
 def test_rebucket_emptied_table_commits_new_count(spark, tmp_path):
@@ -379,45 +289,11 @@ def test_rebucket_emptied_table_commits_new_count(spark, tmp_path):
     stats = rebucket_versioned_bucketed_table(spark, base, 16)
     assert stats["rebucketed"] and stats["n_buckets"] == 16
     m = read_manifest(spark, base)
-    assert m["partitions"] == {} and m["n_buckets"] == 16 and m["key"] == "doc_id"
+    assert m["partitions"] == {} and m["n_buckets"] == 16
     # the next bulk load seeds at the NEW count, spread beyond the old one
     upsert_versioned_bucketed_table(spark, base, spark.createDataFrame(ROWS, SCHEMA))
-    assert _vals(read_versioned_table(spark, base)) == sorted(ROWS)
+    assert _vals(read_versioned_bucketed_table(spark, base)) == sorted(ROWS)
     assert len(read_manifest(spark, base)["partitions"]) > 2
-
-
-def test_rebucket_empty_keyless_never_pins_unvalidated_key(spark, tmp_path):
-    """With no data write to catch a typo, the empty path must NOT pin a
-    caller-supplied key — a pinned typo would wedge every later mutator
-    behind the key-mismatch check with no way to correct it."""
-    import json
-    import pathlib
-
-    base = str(tmp_path / "tbl")
-    write_versioned_bucketed_table(
-        spark.createDataFrame([(0, "a")], SCHEMA), base, n_buckets=2
-    )
-    upsert_versioned_bucketed_table(
-        spark,
-        base,
-        spark.createDataFrame([], SCHEMA),
-        deleted_keys=spark.createDataFrame([(0,)], "doc_id long"),
-    )
-    mp = pathlib.Path(base) / "_manifests" / "v00000002.json"
-    m = json.loads(mp.read_text())
-    del m["key"]  # pre-key-pinning layout, now emptied
-    mp.write_text(json.dumps(m, sort_keys=True))
-
-    stats = rebucket_versioned_bucketed_table(spark, base, 16, key_col="doc_idd")
-    assert stats["rebucketed"]
-    m2 = read_manifest(spark, base)
-    assert m2["n_buckets"] == 16 and "key" not in m2  # typo NOT pinned
-    # the table is still usable: the next bulk load pins its real key
-    upsert_versioned_bucketed_table(
-        spark, base, spark.createDataFrame(ROWS[:4], SCHEMA)
-    )
-    assert read_manifest(spark, base)["key"] == "doc_id"
-    assert _vals(read_versioned_table(spark, base)) == sorted(ROWS[:4])
 
 
 def test_service_rebucket_refuses_empty_sibling(spark, tmp_path):

@@ -12,7 +12,6 @@ from suggest_spark.operators.indexing import build_ngram_index
 from suggest_spark.operators.service import SuggestService
 from suggest_spark.operators.versioned import (
     gc_versions,
-    is_versioned,
     list_manifest_versions,
     read_manifest,
     read_versioned_index,
@@ -42,7 +41,7 @@ def test_versioned_write_read_roundtrip(spark, tmp_path):
     base = str(tmp_path / "vidx")
     dictionary = spark.createDataFrame(BASE, "doc_id long, value string")
     m = write_versioned_index(build_ngram_index(dictionary), base)
-    assert m["version"] == 1 and is_versioned(spark, base)
+    assert m["version"] == 1 and list_manifest_versions(spark, base) == [1]
     assert _rows(read_versioned_index(spark, base)) == _rows(build_ngram_index(dictionary))
 
 
@@ -228,28 +227,3 @@ def test_gc_min_age_keeps_young_versions(spark, tmp_path):
     assert os.path.isdir(f"{base}/v=1")
     # with no age floor the swap window applies as before
     assert gc_versions(spark, base) == [1]
-
-
-def test_flat_layout_gc_after_versioned_upgrade(spark, tmp_path):
-    """Upgrading a flat (round-2) index to the versioned layout must not
-    orphan the stale flat size=* dirs forever: once >= keep_manifests
-    manifests exist they are swept with the same grace rules."""
-    import os
-
-    from suggest_spark.operators.indexing import build_ngram_index, write_ngram_index
-    from suggest_spark.operators.versioned import gc_versions, write_versioned_index
-
-    base = str(tmp_path / "idx")
-    d = spark.createDataFrame([(0, "Nissan March")], "doc_id long, value string")
-    write_ngram_index(build_ngram_index(d), base)  # flat layout
-    flat_dirs = [n for n in os.listdir(base) if n.startswith("size=")]
-    assert flat_dirs
-
-    write_versioned_index(build_ngram_index(d), base)  # upgrade: v=1
-    gc_versions(spark, base)  # one manifest only: flat data is the previous snapshot
-    assert any(n.startswith("size=") for n in os.listdir(base))
-
-    write_versioned_index(build_ngram_index(d), base)  # second swap: v=2
-    gc_versions(spark, base)
-    assert not any(n.startswith("size=") for n in os.listdir(base))
-    # a young flat layout is also protected by the age floor
