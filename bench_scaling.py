@@ -75,8 +75,9 @@ def run_single(cores: int) -> None:
     # int-id-encoded record table.  Broadcast flags are EXPLICIT so no
     # auto-detection count() jobs land inside the timed window (measured:
     # each such driver action is pure serial time that caps efficiency;
-    # carrying the tid arrays through the join instead — scoring.fused_
-    # matches — is 3-4x slower from the fatter join output, see BASELINE.md).
+    # carrying the tid arrays through the join instead — a fused variant,
+    # since removed — was 3-4x slower from the fatter join output, see
+    # BASELINE.md).
     reps = int(os.environ.get("SCALING_REPS", "3"))
     best_bs = None
     for _ in range(reps):

@@ -166,7 +166,6 @@ def prefix_keys(
     metric: Metric,
     alpha: float,
     delta_max: int | None = None,
-    carry_tids: bool = False,
 ) -> DataFrame:
     """``(tid, rid, msize, kappa, delta, tmass)`` blocking keys from encoded
     records (see :func:`encode_records`).
@@ -200,9 +199,8 @@ def prefix_keys(
         & (e["tmass"] + F.col("kappa") * F.lit(delta_max) >= r_min),
     )
 
-    extra = ["tids"] if carry_tids else []
     return encoded.select(
-        "rid", "msize", "kappa", "delta", *extra, F.explode(kept).alias("e")
+        "rid", "msize", "kappa", "delta", F.explode(kept).alias("e")
     ).select(
         F.col("e")["tid"].alias("tid"),
         "rid",
@@ -210,7 +208,6 @@ def prefix_keys(
         "kappa",
         "delta",
         F.col("e")["tmass"].alias("tmass"),
-        *extra,
     )
 
 

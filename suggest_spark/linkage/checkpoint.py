@@ -25,6 +25,13 @@ recovery is stage-granular by manifest.  The per-partition entries in the
 manifest are the audit trail (row counts + bytes per output file) that lets
 an operator verify a restored stage partition-by-partition rather than a
 resume index.
+
+The audit is one Spark job per stage: the written output is read back with
+the schema the stage already knows (a parquet read without one runs a
+schema-inference job) and grouped by ``input_file_name()``, giving each
+file's row count and xxhash64 sum together; the total rows and the
+checksum are their sums (see :func:`_content_checksum`), and file bytes
+come from a directory listing.
 """
 
 from __future__ import annotations
@@ -41,28 +48,31 @@ from pyspark.sql import functions as F
 MANIFEST = "_MANIFEST.json"
 
 
-def _content_checksum(df: DataFrame) -> int:
-    """Order-insensitive content checksum (decimal sum of row hashes —
-    overflow-proof under ANSI mode)."""
-    row = df.select(
-        F.coalesce(
-            F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")), F.lit(0)
-        ).alias("h")
-    ).first()
-    return int(row["h"])
+def _content_checksum(df: DataFrame) -> tuple[dict[str, int], int]:
+    """One job: ``({output file: rows}, checksum)`` for a DataFrame read
+    back from parquet.
 
-
-def _file_metrics(path: str, df: DataFrame | None = None) -> list[dict]:
-    """Per-partition (output file) metrics: bytes from the filesystem, row
-    counts from one grouped pass over the written data."""
-    rows_by_file: dict[str, int] = {}
-    if df is not None:
-        counted = (
-            df.groupBy(F.input_file_name().alias("f"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+    The checksum is order-insensitive: the decimal(38,0) sum of the rows'
+    ``xxhash64`` (overflow-proof under ANSI mode).  Grouping by
+    ``input_file_name()`` gives each file's row count and hash sum in the
+    same pass; the per-file decimal sums add up, as exact Python ints, to
+    the whole-table sum, and an empty table has no group, so 0 rows and
+    checksum 0."""
+    per_file = (
+        df.groupBy(F.input_file_name().alias("f"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
         )
-        rows_by_file = {os.path.basename(r["f"]): int(r["n"]) for r in counted}
+        .collect()
+    )
+    rows_by_file = {os.path.basename(r["f"]): int(r["n"]) for r in per_file}
+    return rows_by_file, sum(int(r["h"]) for r in per_file)
+
+
+def _file_metrics(path: str, rows_by_file: dict[str, int]) -> list[dict]:
+    """Per-partition (output file) metrics: bytes from a listing of
+    ``path``, rows from :func:`_content_checksum`'s per-file counts."""
     out = []
     for name in sorted(os.listdir(path)):
         if name.startswith("_") or name.startswith("."):
@@ -136,16 +146,18 @@ class CheckpointedPipeline:
         shutil.rmtree(tmp_dir, ignore_errors=True)
         df.write.mode("overwrite").parquet(tmp_dir)
 
-        out = self.spark.read.parquet(tmp_dir)
-        rows = out.count()
-        checksum = _content_checksum(out)
+        # the schema is known: passing it skips parquet schema inference,
+        # which is a Spark job per read
+        reader = self.spark.read.schema(df.schema)
+        rows_by_file, checksum = _content_checksum(reader.parquet(tmp_dir))
+        rows = sum(rows_by_file.values())
         manifest = {
             "stage": name,
             "config_fingerprint": self.config_fingerprint,
             "lineage": lineage,
             "rows": rows,
             "checksum": checksum,
-            "partitions": _file_metrics(tmp_dir, out),
+            "partitions": _file_metrics(tmp_dir, rows_by_file),
             "wall_sec": round(time.time() - t0, 3),
             "metrics": extra_metrics or {},
         }
@@ -158,4 +170,4 @@ class CheckpointedPipeline:
         self.events.append(
             {"stage": name, "skipped": False, "rows": rows, "wall_sec": manifest["wall_sec"]}
         )
-        return StageResult(name, self.spark.read.parquet(stage_dir), skipped=False, manifest=manifest)
+        return StageResult(name, reader.parquet(stage_dir), skipped=False, manifest=manifest)

@@ -3,6 +3,14 @@ large-star / small-star DataFrame rounds (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SOCC'14 — converges in O(log² n)
 rounds; record-linkage graphs converge in a handful).
 
+Small match graphs (the common case after linkage scoring — the edge count
+is known from the matches manifest) skip the rounds and run a driver
+union-find instead.  Its edges come in through ``toArrow()`` and its
+``(rid, cluster_id)`` result goes back as an Arrow table, which Spark turns
+into a JVM-side local relation: a row ``collect()`` plus
+``createDataFrame(list)`` would build a Python RDD and start Python workers
+for two jobs, seconds of task time for a few thousand rows.
+
 Catalyst has no fixpoint operator (SURVEY.md §4), so the loop runs on the
 driver with ``localCheckpoint()`` per round to truncate lineage.  Node ids
 are orderable strings (md5 of url — deterministic across runs and
@@ -72,12 +80,15 @@ def _cc_driver_unionfind(edges: DataFrame) -> DataFrame:
     """Driver-side union-find over a SMALL edge set (caller-gated by a known
     row count — never probed here).  Union-by-min keeps every root the
     component minimum, so output semantics are identical to the distributed
-    star rounds; id ordering carries over because binary rids collect as
-    bytes whose lexicographic order equals Spark's BINARY order."""
+    star rounds; id ordering carries over because binary rids arrive as
+    bytes whose lexicographic order equals Spark's BINARY order.  Edges in
+    and clusters out both go through Arrow (see the module docstring)."""
+    import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
     spark = edges.sparkSession
     id_type = edges.schema["src"].dataType
+    arrow = edges.select("src", "dst").toArrow()
 
     parent: dict = {}
 
@@ -90,10 +101,7 @@ def _cc_driver_unionfind(edges: DataFrame) -> DataFrame:
         return root
 
     nodes = set()
-    for r in edges.select("src", "dst").collect():
-        a, b = r["src"], r["dst"]
-        if isinstance(a, bytearray):
-            a, b = bytes(a), bytes(b)
+    for a, b in zip(arrow["src"].to_pylist(), arrow["dst"].to_pylist()):
         nodes.add(a)
         nodes.add(b)
         ra, rb = find(a), find(b)
@@ -105,7 +113,11 @@ def _cc_driver_unionfind(edges: DataFrame) -> DataFrame:
     schema = StructType(
         [StructField("rid", id_type), StructField("cluster_id", id_type)]
     )
-    return spark.createDataFrame([(n, find(n)) for n in nodes], schema)
+    rids = list(nodes)
+    # an Arrow table, not a pandas frame: createDataFrame sends an EMPTY
+    # pandas frame down the row path (a Python RDD) instead of Arrow
+    out = pa.table({"rid": rids, "cluster_id": [find(n) for n in rids]})
+    return spark.createDataFrame(out, schema)
 
 
 #: edge count below which the driver union-find path is used when the caller

@@ -13,6 +13,14 @@ over ALL candidates (the hot path never crosses the Python boundary);
 Levenshtein (built-in) and the Arrow-batched Jaro-Winkler pandas UDF run
 only on pairs that already passed the similarity threshold — batched
 vectorized Python on the small survivor set, never per-row on the firehose.
+
+Why the survivor set is rebalanced: without a shuffle of its own, the
+Python stage inherits the partitioning of the pair⋈record join, which is
+sized by the CANDIDATE set — dozens of tasks, each starting a Python
+worker for a handful of survivors (36 tasks for 545 rows at bench scale).
+``attach_tiebreakers`` puts a ``rebalance`` hint on the survivors, so AQE
+sizes the UDF stage by survivor bytes: one partition when the survivors
+are few, many (and skew-split) when they are many at cluster scale.
 """
 
 from __future__ import annotations
@@ -25,7 +33,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ..functions.metrics import Metric
-from .blocking import prefix_keys
 
 
 def overlap_py(terms_a: list[str], terms_b: list[str]) -> int:
@@ -120,7 +127,11 @@ def attach_tiebreakers(
 ) -> DataFrame:
     """Stage 2 — tie-breakers on SURVIVORS only (orders of magnitude fewer
     rows than candidates): JVM levenshtein + Arrow-batched Jaro-Winkler
-    pandas UDF (north-rule mandate)."""
+    pandas UDF (north-rule mandate).
+
+    ``survivors`` is rebalanced first, so the Python stage gets partitions
+    sized by survivor bytes rather than the scoring join's partition count
+    (see the module docstring)."""
     texts = records.select("rid", "text")
 
     def _side(df: DataFrame) -> DataFrame:
@@ -128,7 +139,7 @@ def attach_tiebreakers(
 
     ta = _side(texts).select(F.col("rid").alias("rid_a"), F.col("text").alias("text_a"))
     tb = _side(texts).select(F.col("rid").alias("rid_b"), F.col("text").alias("text_b"))
-    with_text = survivors.join(ta, "rid_a").join(tb, "rid_b")
+    with_text = survivors.hint("rebalance").join(ta, "rid_a").join(tb, "rid_b")
     return with_text.select(
         "rid_a",
         "rid_b",
@@ -139,82 +150,6 @@ def attach_tiebreakers(
         F.levenshtein("text_a", "text_b").alias("lev"),
         _jw_udf()("text_a", "text_b").alias("jw"),
     )
-
-
-def fused_matches(
-    encoded: DataFrame,
-    records: DataFrame,
-    metric: Metric,
-    alpha: float,
-    delta_max: int | None = None,
-    broadcast_keys: bool = False,
-    broadcast_records: bool = True,
-) -> DataFrame:
-    """Blocking + candidate generation + scoring fused into ONE join stage.
-
-    The prefix keys carry each record's sorted tid array
-    (blocking.prefix_keys(carry_tids=True)), so the self-join output has both
-    gram arrays in-row and overlap/similarity are computed inline by
-    whole-stage codegen — no second join against the record table, no
-    intermediate (rid_a, rid_b) materialization, no broadcast hash builds on
-    the driver (with ``broadcast_keys=False`` the self-join shuffles both
-    sides by ``tid``: fully parallel, AQE-skew-splittable — the strategy that
-    survives at cluster scale where neither side broadcasts).
-
-    Plan shape: shuffle(keys) ⋈ shuffle(keys) → filter(length + positional +
-    sim>=alpha) → dropDuplicates(rid_a, rid_b) [tiny survivor set] →
-    broadcast-join texts → levenshtein + Jaro-Winkler.  Carrying the tid
-    arrays through the key shuffle costs ~avg_prefix_len× duplication of each
-    record's array (the classic PPJoin space/time trade-off); candidates that
-    fail the pair filters never touch a hash table or a second stage.
-
-    Same output as candidate_pairs(dedup=False) → score_pairs(dedup_pairs=
-    True) — asserted by tests/test_linkage.py.
-    """
-    keys = prefix_keys(encoded, metric, alpha, delta_max=delta_max, carry_tids=True)
-
-    a = keys.select(
-        "tid",
-        F.col("rid").alias("rid_a"),
-        F.col("msize").alias("size_a"),
-        F.col("kappa").alias("kappa_a"),
-        F.col("delta").alias("delta_a"),
-        F.col("tmass").alias("tmass_a"),
-        F.col("tids").alias("tids_a"),
-    )
-    b = keys.select(
-        "tid",
-        F.col("rid").alias("rid_b"),
-        F.col("msize").alias("size_b"),
-        F.col("kappa").alias("kappa_b"),
-        F.col("delta").alias("delta_b"),
-        F.col("tmass").alias("tmass_b"),
-        F.col("tids").alias("tids_b"),
-    )
-    if broadcast_keys:
-        b = F.broadcast(b)
-
-    ub = F.least(
-        F.col("tmass_a") + F.col("kappa_a") * F.col("delta_b"),
-        F.col("tmass_b") + F.col("kappa_b") * F.col("delta_a"),
-    )
-    t = metric.threshold(alpha, F.col("size_a"), F.col("size_b"))
-    joined = a.join(b, "tid", "inner").where(
-        (F.col("rid_a") < F.col("rid_b"))
-        & F.col("size_b").between(
-            metric.min_y(alpha, F.col("size_a")), metric.max_y(alpha, F.col("size_a"))
-        )
-        & (ub >= t)
-    )
-    sim = metric.similarity(F.col("overlap"), F.col("size_a"), F.col("size_b"))
-    survivors = (
-        joined.withColumn("overlap", overlap_col().cast("int"))
-        .withColumn("sim", sim)
-        .where(F.col("sim") >= alpha)
-        .select("rid_a", "rid_b", "overlap", "size_a", "size_b", "sim")
-        .dropDuplicates(["rid_a", "rid_b"])
-    )
-    return attach_tiebreakers(survivors, records, broadcast_records=broadcast_records)
 
 
 def score_pairs(

@@ -257,6 +257,17 @@ def train_ivf_centroids(
     return cs
 
 
+def _tuning_sample(corpus: DataFrame, n_queries: int, corpus_id: str) -> DataFrame:
+    """The ``n_queries`` corpus rows first in ``(xxhash64(id), id)`` order.
+
+    The lowest ids would follow id locality: a corpus loaded cluster by
+    cluster or source by source gives its lowest ids to one region of the
+    space, and the recall measured there says little about the rest.  The
+    hash order is deterministic and independent of how ids were assigned;
+    the id breaks hash ties."""
+    return corpus.orderBy(F.xxhash64(corpus_id), corpus_id).limit(n_queries)
+
+
 def tune_n_probe(
     corpus: DataFrame,
     centroids: list[list[float]],
@@ -278,8 +289,8 @@ def tune_n_probe(
     query's centroid-probe order.  IVF-flat with exact rerank returns a
     true neighbor iff its cell is probed, so
     ``recall@p = P(cell_rank <= p)`` — the whole recall curve from one job,
-    no per-``p`` reruns.  Deterministic: the sample is the ``n_queries``
-    lowest-id corpus vectors.
+    no per-``p`` reruns.  Deterministic: the sample is
+    :func:`_tuning_sample`, spread over the id space by hash order.
 
     Returns ``{"n_probe", "achieved_recall", "target_recall",
     "recall_by_n_probe", "n_sampled_pairs", "k", "n_centroids"}``.
@@ -289,7 +300,7 @@ def tune_n_probe(
     from bisect import bisect_right
 
     n_c = len(centroids)
-    sample = corpus.orderBy(corpus_id).limit(n_queries).select(
+    sample = _tuning_sample(corpus, n_queries, corpus_id).select(
         F.col(corpus_id).alias("sq_id"), F.col(vec)
     )
     exact = cosine_topk(

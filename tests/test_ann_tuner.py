@@ -17,9 +17,11 @@ N_QUERIES = 40
 
 def _recall_at(spark, corpus, centroids, n_probe):
     """Independent recall measurement: exact vs ivf_topk result sets on the
-    same lowest-id sample the tuner used."""
-    sample = corpus.orderBy("vec_id").limit(N_QUERIES).withColumnRenamed(
-        "vec_id", "query_id"
+    same hash-ordered sample the tuner used."""
+    sample = (
+        corpus.orderBy(F.xxhash64("vec_id"), "vec_id")
+        .limit(N_QUERIES)
+        .withColumnRenamed("vec_id", "query_id")
     )
     exact, got = {}, {}
     for r in ann.cosine_topk(sample, corpus, K).collect():
@@ -86,6 +88,30 @@ def test_tuner_hits_target_on_uniform_fixture(spark, uniform):
     assert _recall_at(spark, uniform, cents, stats["n_probe"]) == pytest.approx(
         stats["achieved_recall"], abs=1e-9
     )
+
+
+def test_tuning_sample_ignores_id_locality(spark):
+    """On a corpus whose ids run cluster by cluster, the lowest ids are one
+    cluster; the tuner's sample is not that block and spans clusters."""
+    from pyspark.sql import Window
+
+    raw = make_clustered_embeddings(spark, 1200, dim=8, n_clusters=12, seed=3)
+    by_cluster = raw.select(
+        (F.row_number().over(Window.orderBy("cluster", "vec_id")) - 1).alias("vec_id"),
+        "cluster",
+        "embedding",
+    ).cache()
+    lowest = by_cluster.orderBy("vec_id").limit(N_QUERIES).collect()
+    assert len({r["cluster"] for r in lowest}) == 1  # the fixture is id-clustered
+
+    first = ann._tuning_sample(by_cluster, N_QUERIES, "vec_id").collect()
+    again = ann._tuning_sample(by_cluster, N_QUERIES, "vec_id").collect()
+    ids = [r["vec_id"] for r in first]
+    assert ids == [r["vec_id"] for r in again]  # deterministic
+    assert len(set(ids)) == N_QUERIES
+    assert sorted(ids) != list(range(N_QUERIES))
+    assert len({r["cluster"] for r in first}) >= 6
+    by_cluster.unpersist()
 
 
 def test_write_ivf_records_stats_and_probe_uses_them(spark, clustered, tmp_path):

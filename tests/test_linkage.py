@@ -3,12 +3,14 @@ components, checkpoint/resume, and the pairwise-F1 north-rule criterion."""
 
 import os
 from collections import Counter
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
 from suggest_spark.functions.analysis import tokenize
 from suggest_spark.functions.metrics import COSINE, JACCARD
+from suggest_spark.linkage import checkpoint
 from suggest_spark.linkage.blocking import candidate_pairs
 from suggest_spark.linkage.clustering import connected_components
 from suggest_spark.linkage.pipeline import (
@@ -133,34 +135,6 @@ def test_scoring_matches_python_oracle(spark, pages, pages_pdf):
         assert r["lev"] >= 0
 
 
-def test_fused_matches_equals_unfused(spark, pages):
-    # the single-stage fused path (bench/scaling hot path) must produce
-    # EXACTLY the rows of candidate_pairs(dedup=False) → score_pairs(
-    # dedup_pairs=True), for both join strategies
-    from suggest_spark.linkage.blocking import encode_records
-    from suggest_spark.linkage.scoring import fused_matches
-
-    cfg = LinkageConfig(metric=JACCARD, alpha=ALPHA)
-    records = build_records(pages, cfg).cache()
-    encoded = encode_records(records).cache()
-    pairs = candidate_pairs(encoded, JACCARD, ALPHA, dedup=False)
-    want = {
-        (r["rid_a"], r["rid_b"], r["overlap"], r["size_a"], r["size_b"], r["sim"])
-        for r in score_pairs(
-            pairs, records, JACCARD, ALPHA, dedup_pairs=True, encoded=encoded
-        ).collect()
-    }
-    assert want
-    for bk in (False, True):
-        got = {
-            (r["rid_a"], r["rid_b"], r["overlap"], r["size_a"], r["size_b"], r["sim"])
-            for r in fused_matches(
-                encoded, records, JACCARD, ALPHA, broadcast_keys=bk
-            ).collect()
-        }
-        assert got == want
-
-
 def test_jaro_winkler_known_values():
     # classic published examples
     assert jaro_winkler_py("MARTHA", "MARHTA") == pytest.approx(0.9611, abs=1e-4)
@@ -234,6 +208,171 @@ def test_connected_components_driver_path_binary_ids(spark):
     }
     assert fast == slow
     assert len(fast) == 11  # 6-node chain + 3-node chain + 2-node edge
+
+
+@pytest.mark.parametrize(
+    "id_type,ids,n_edges",
+    [
+        ("string", [f"n{i:02d}" for i in range(6)], 3),
+        ("long", [40, 7, 12, 3, 99, 5], 3),
+        ("binary", [url_id_py(f"u{i}") for i in range(6)], 3),
+        ("binary", [], 0),
+    ],
+)
+def test_driver_unionfind_id_types(spark, id_type, ids, n_edges):
+    """The Arrow round trip of the driver union-find keeps every id type
+    and its ordering: component minima equal the oracle's.  An empty edge
+    set gives an empty, typed result."""
+    edges = [(ids[0], ids[1]), (ids[2], ids[1]), (ids[3], ids[4])] if n_edges else []
+    df = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}")
+    out = connected_components(df, n_edges=len(edges))
+    assert out.schema["rid"].dataType == df.schema["src"].dataType
+    assert out.schema["cluster_id"].dataType == df.schema["src"].dataType
+    norm = bytes if id_type == "binary" else (lambda x: x)
+    got = {norm(r["rid"]): norm(r["cluster_id"]) for r in out.collect()}
+    assert got == _cc_oracle(edges)
+
+
+@contextmanager
+def _job_group(sc, group):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def _rdd_names(sc, group) -> list[str]:
+    """Names of every RDD in the stages of the jobs run under ``group``,
+    from the status store's per-stage operation graphs."""
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    names = []
+
+    def walk(cluster):
+        nodes, kids = cluster.childNodes(), cluster.childClusters()
+        names.extend(nodes.apply(i).name() for i in range(nodes.size()))
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    for j in tracker.getJobIdsForGroup(group):
+        for s in tracker.getJobInfo(j).stageIds:
+            walk(store.operationGraphForStage(s).rootCluster())
+    return names
+
+
+@pytest.mark.parametrize("n_edges", [4, 0])
+def test_driver_unionfind_starts_no_python_rdd(spark, n_edges):
+    """Edges in and clusters out through Arrow: no job of the union-find
+    path, nor of reading its result, runs a Python RDD (a Python worker) —
+    the empty edge set included."""
+    import pandas as pd
+
+    sc = spark.sparkContext
+    ids = [url_id_py(f"p{i}") for i in range(5)]
+    # a pandas frame goes through Arrow, so the edges hold no Python RDD
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": ids[:4], "dst": ids[1:]}), "src binary, dst binary"
+    ).limit(n_edges)
+    group = f"uf_python_rdd_probe_{n_edges}"
+    with _job_group(sc, group):
+        # control: a row-list createDataFrame does run a Python RDD, so the
+        # probe can see one
+        spark.createDataFrame([(1,)], "x long").collect()
+    assert "PythonRDD" in _rdd_names(sc, group)
+
+    group = f"uf_driver_path_{n_edges}"
+    with _job_group(sc, group):
+        rows = connected_components(edges, n_edges=n_edges).collect()
+    assert len(rows) == (5 if n_edges else 0)
+    assert {bytes(r["cluster_id"]) for r in rows} <= {min(ids)}
+    names = _rdd_names(sc, group)
+    assert "PythonRDD" not in names, names
+
+
+#: Spark jobs of one warm run_linkage pass on the fixture, as measured; a
+#: higher count means a per-stage audit job, a schema-inference read or a
+#: Python-RDD job has come back
+WARM_PASS_MAX_JOBS = 29
+
+
+def test_warm_pass_job_budget(spark, pages, tmp_path_factory):
+    sc = spark.sparkContext
+    cfg = LinkageConfig(metric=JACCARD, alpha=ALPHA)
+    run_linkage(spark, pages, cfg, str(tmp_path_factory.mktemp("budget_cold")))
+    with _job_group(sc, "linkage_warm_pass"):
+        res = run_linkage(spark, pages, cfg, str(tmp_path_factory.mktemp("budget_warm")))
+        res["url_clusters"].write.format("noop").mode("overwrite").save()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("linkage_warm_pass"))
+    assert n_jobs <= WARM_PASS_MAX_JOBS, n_jobs
+
+
+def test_jaro_winkler_runs_on_rebalanced_survivors(spark, pages):
+    """The Arrow Jaro-Winkler stage reads the rebalanced survivor set, so
+    AQE sizes it by survivor bytes instead of inheriting the scoring join's
+    partitioning."""
+    cfg = LinkageConfig(metric=JACCARD, alpha=ALPHA)
+    records = build_records(pages, cfg)
+    matches = score_pairs(candidate_pairs(records, JACCARD, ALPHA), records, JACCARD, ALPHA)
+    matches.collect()
+    plan = matches._jdf.queryExecution().executedPlan().toString().splitlines()
+    at = next(i for i, line in enumerate(plan) if "ArrowEvalPython" in line)
+    below = [line for line in plan[at + 1:] if "Exchange" in line and "BroadcastExchange" not in line]
+    assert below and "REBALANCE_PARTITIONS_BY_NONE" in below[0], "\n".join(plan)
+
+
+def _old_audit(df, path):
+    """The audit as three separate passes: count(), a whole-table hash sum
+    and a grouped per-file row count."""
+    rows = df.count()
+    checksum = int(
+        df.select(
+            F.coalesce(F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")), F.lit(0))
+        ).first()[0]
+    )
+    per_file = {
+        os.path.basename(r[0]): r[1]
+        for r in df.groupBy(F.input_file_name()).count().collect()
+    }
+    files = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+    return rows, checksum, {f: per_file.get(f, 0) for f in files}
+
+
+@pytest.mark.parametrize("n_rows", [0, 500])
+def test_one_job_audit_equals_separate_passes(spark, tmp_path, n_rows):
+    path = str(tmp_path / "t")
+    src = spark.range(n_rows).select(
+        F.col("id"),
+        (F.col("id") * 7919 % 101).cast("string").alias("s"),
+        F.array(F.col("id"), F.col("id") + 1).alias("a"),
+    )
+    src.repartition(3).write.parquet(path)
+    df = spark.read.schema(src.schema).parquet(path)
+    rows_by_file, checksum = checkpoint._content_checksum(df)
+    parts = checkpoint._file_metrics(path, rows_by_file)
+    old_rows, old_checksum, old_per_file = _old_audit(df, path)
+    assert sum(rows_by_file.values()) == old_rows == n_rows
+    assert checksum == old_checksum
+    assert {p["file"]: p["rows"] for p in parts} == old_per_file
+    if n_rows:
+        assert sum(1 for v in old_per_file.values() if v) == 3
+
+
+def test_linkage_with_zero_matches(spark, tmp_path):
+    """No two pages share enough grams: the empty match set goes through the
+    empty-edge union-find and every record is its own singleton cluster."""
+    words = ["quartz", "bicycle", "lemonade", "typhoon", "zeppelin", "marmot"]
+    pages_df = spark.createDataFrame(
+        [(f"https://site.example/p/{i}", w) for i, w in enumerate(words)],
+        "url string, text string",
+    )
+    res = run_linkage(spark, pages_df, LinkageConfig(metric=JACCARD, alpha=ALPHA), str(tmp_path))
+    events = {e["stage"]: e["rows"] for e in res["_pipeline"].events}
+    assert events["matches"] == 0
+    assert events["clusters"] == len(words)
+    clusters = res["clusters"].collect()
+    assert all(r["rid"] == r["cluster_id"] for r in clusters)
+    assert res["url_clusters"].count() == len(words)
 
 
 def test_clusters_match_entities(spark, pages, pages_pdf, tmp_path_factory):
