@@ -16,6 +16,7 @@ process behind a balancer, each reindexing from the same warehouse.
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import signal
 import sys
@@ -150,8 +151,10 @@ def warm_service(service) -> None:
         service.warm(name)
         try:
             service.enable_hot_replica(name)
-        except ValueError:
-            pass  # corpus-scale entry: stays on the coalesced Spark path
+        except ValueError as exc:  # corpus-scale entry: coalesced Spark path
+            logging.getLogger(__name__).warning(
+                "hot replica refused for %r, serving it on the Spark path: %s", name, exc
+            )
 
 
 def main() -> None:

@@ -19,8 +19,10 @@ identical) of:
 * Exact    — pkg/metric/exact.go:10-24
 
 Every function has a pure-Python form (``*_py``) and a Spark Column form;
-``threshold_sql``/``similarity_sql`` emit the equivalent ANSI SQL for the
-DuckDB oracle.
+``threshold_np``/``similarity_np`` are the numpy array forms the hot replica
+scores candidates with (same operation order as ``*_py``, size products in
+int64, so the results are bit-identical); ``threshold_sql``/``similarity_sql``
+emit the equivalent ANSI SQL for the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,6 +45,21 @@ def _sql_dbl(x: float) -> str:
 
 def _dbl(c: Column) -> Column:
     return c.cast("double")
+
+
+def _i64(x) -> np.ndarray:
+    """Sizes/overlaps as int64: Python ints never overflow, so products like
+    ``size_a * size_b`` must not wrap at int32 either.  Cast EVERY operand —
+    numpy's value-based casting keeps ``int64 0-d × int32[]`` in int32."""
+    return np.asarray(x, dtype=np.int64)
+
+
+def _f64(x) -> np.ndarray:
+    return _i64(x).astype(np.float64)
+
+
+def _ceil_int(x: np.ndarray) -> np.ndarray:
+    return np.ceil(x).astype(np.int64)
 
 
 @dataclass(frozen=True)
@@ -61,6 +79,13 @@ class Metric:
         raise NotImplementedError
 
     def similarity_py(self, inter: int, size_a: int, size_b: int) -> float:
+        raise NotImplementedError
+
+    # ---- numpy arrays (broadcasting; bit-identical to the *_py forms) -----
+    def threshold_np(self, alpha: float, size_a, size_b) -> np.ndarray:
+        raise NotImplementedError
+
+    def similarity_np(self, inter, size_a, size_b) -> np.ndarray:
         raise NotImplementedError
 
     # ---- Spark columns ----------------------------------------------------
@@ -108,6 +133,12 @@ class Jaccard(Metric):
     def similarity_py(self, inter, size_a, size_b):
         return float(inter) / float(size_a + size_b - inter)
 
+    def threshold_np(self, alpha, size_a, size_b):
+        return _ceil_int(alpha * _f64(_i64(size_a) + _i64(size_b)) / (1 + alpha))
+
+    def similarity_np(self, inter, size_a, size_b):
+        return _f64(inter) / _f64(_i64(size_a) + _i64(size_b) - _i64(inter))
+
     def min_y(self, alpha, size):
         return F.ceil(F.lit(alpha) * _dbl(size)).cast("int")
 
@@ -150,6 +181,12 @@ class Cosine(Metric):
 
     def similarity_py(self, inter, size_a, size_b):
         return float(inter) / math.sqrt(float(size_a * size_b))
+
+    def threshold_np(self, alpha, size_a, size_b):
+        return _ceil_int(alpha * np.sqrt(_f64(_i64(size_a) * _i64(size_b))))
+
+    def similarity_np(self, inter, size_a, size_b):
+        return _f64(inter) / np.sqrt(_f64(_i64(size_a) * _i64(size_b)))
 
     def min_y(self, alpha, size):
         return F.ceil(F.lit(alpha * alpha) * _dbl(size)).cast("int")
@@ -194,6 +231,12 @@ class Dice(Metric):
     def similarity_py(self, inter, size_a, size_b):
         return float(2 * inter) / float(size_a + size_b)
 
+    def threshold_np(self, alpha, size_a, size_b):
+        return _ceil_int(0.5 * alpha * _f64(_i64(size_a) + _i64(size_b)))
+
+    def similarity_np(self, inter, size_a, size_b):
+        return _f64(2 * _i64(inter)) / _f64(_i64(size_a) + _i64(size_b))
+
     def min_y(self, alpha, size):
         return F.ceil(F.lit(alpha / (2 - alpha)) * _dbl(size)).cast("int")
 
@@ -237,6 +280,12 @@ class Overlap(Metric):
     def similarity_py(self, inter, size_a, size_b):
         return float(inter) / min(float(size_a), float(size_b))
 
+    def threshold_np(self, alpha, size_a, size_b):
+        return _ceil_int(alpha * np.minimum(_f64(size_a), _f64(size_b)))
+
+    def similarity_np(self, inter, size_a, size_b):
+        return _f64(inter) / np.minimum(_f64(size_a), _f64(size_b))
+
     def min_y(self, alpha, size):
         return F.lit(1)
 
@@ -279,6 +328,12 @@ class Exact(Metric):
 
     def similarity_py(self, inter, size_a, size_b):
         return 1.0
+
+    def threshold_np(self, alpha, size_a, size_b):
+        return np.full(np.broadcast(size_a, size_b).shape, size_a, dtype=np.int64)
+
+    def similarity_np(self, inter, size_a, size_b):
+        return np.ones(np.broadcast(inter, size_a, size_b).shape)
 
     def min_y(self, alpha, size):
         return size.cast("int")

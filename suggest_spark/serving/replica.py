@@ -11,7 +11,18 @@ lone requests from a compact in-process snapshot of it.
 
 :class:`HotReplica` is that snapshot: one Arrow transfer of the entry's
 ``(term, size, doc_id, multiplicity)`` postings plus the ``(doc_id, value)``
-dictionary at enable time, then pure-Python/numpy scan-count per request.
+dictionary at enable time, then a handful of numpy array operations per
+request — no per-candidate Python:
+
+* each term's posting list is stored sorted by ``(size, doc_id)`` (the
+  reference's length segmentation, pkg/index/indices.go:3-14), so the
+  LengthFilter window is a ``searchsorted`` slice, not a full-list mask;
+* ScanCount is ``np.unique`` + ``np.bincount`` over the sliced lists;
+* CountFilter and scoring are the metric's ``threshold_np`` /
+  ``similarity_np`` forms under one boolean mask;
+* top-k is ``np.partition`` (every tie at the k-th score kept) then a
+  ``(score desc, doc_id asc)`` lexsort of the survivors.
+
 It is NOT an independent implementation of the query semantics so much as a
 re-expression of the exact same algebra the Spark plan runs
 (operators/suggest.py):
@@ -39,7 +50,6 @@ above ``max_postings`` instead of OOM-ing the driver.
 
 from __future__ import annotations
 
-import heapq
 from collections import Counter
 
 import numpy as np
@@ -71,7 +81,9 @@ class HotReplica:
         max_postings: int = DEFAULT_MAX_POSTINGS,
     ):
         #: term -> (sizes int32[], doc_ids int64[], mults int32[]) — the
-        #: posting list, multiplicity-annotated (multiset semantics)
+        #: posting list, multiplicity-annotated (multiset semantics), sorted
+        #: by (size, doc_id): every constructor and mutator keeps that order,
+        #: since the LengthFilter slice relies on it
         self._postings = postings
         self._values = values
         self.config = config
@@ -118,7 +130,7 @@ class HotReplica:
             bounds = np.append(starts, len(terms))
             for i, t in enumerate(uniq):
                 s, e = bounds[i], bounds[i + 1]
-                postings[t] = (sizes[s:e], docs[s:e], mults[s:e])
+                postings[t] = _size_sorted(sizes[s:e], docs[s:e], mults[s:e])
         vdf = dictionary.select("doc_id", "value").toPandas()
         values = dict(zip(vdf["doc_id"].tolist(), vdf["value"].tolist()))
         return cls(postings, values, config, n, max_postings=max_postings)
@@ -197,10 +209,12 @@ class HotReplica:
                 docs = np.empty(0, np.int64)
                 mults = np.empty(0, np.int32)
             adds = add_by_term.get(t)
-            if adds:
-                sizes = np.concatenate([sizes, np.array([a[1] for a in adds], np.int32)])
-                docs = np.concatenate([docs, np.array([a[0] for a in adds], np.int64)])
-                mults = np.concatenate([mults, np.array([a[2] for a in adds], np.int32)])
+            if adds:  # a row drop keeps the order; appended rows need a re-sort
+                sizes, docs, mults = _size_sorted(
+                    np.concatenate([sizes, np.array([a[1] for a in adds], np.int32)]),
+                    np.concatenate([docs, np.array([a[0] for a in adds], np.int64)]),
+                    np.concatenate([mults, np.array([a[2] for a in adds], np.int32)]),
+                )
             if len(docs):
                 postings[t] = (sizes, docs, mults)
             else:
@@ -227,32 +241,30 @@ class HotReplica:
     # -- the scan-count core (shared by suggest and autocomplete) ------------
 
     def _accumulate(self, counts: Counter, size_lo: int, size_hi: int | None):
-        """(doc_ids, sizes, overlaps) for docs sharing ≥1 gram with the
-        query, sizes within [size_lo, size_hi]; overlap = multiset product."""
+        """(doc_ids asc, sizes int64, overlaps int64) for docs sharing ≥1 gram
+        with the query, sizes within [size_lo, size_hi] (``None``: no upper
+        bound); overlap = multiset product Σ_t mult_q(t)·mult_d(t)."""
         docs_parts, sizes_parts, w_parts = [], [], []
         for t, mq in counts.items():
             p = self._postings.get(t)
             if p is None:
                 continue
             psizes, pdocs, pmults = p
-            mask = psizes >= size_lo
-            if size_hi is not None:
-                mask &= psizes <= size_hi
-            if not mask.any():
+            lo = np.searchsorted(psizes, size_lo, "left")
+            hi = len(psizes) if size_hi is None else np.searchsorted(psizes, size_hi, "right")
+            if lo >= hi:
                 continue
-            docs_parts.append(pdocs[mask])
-            sizes_parts.append(psizes[mask])
-            w_parts.append(pmults[mask].astype(np.int64) * mq)
+            docs_parts.append(pdocs[lo:hi])
+            sizes_parts.append(psizes[lo:hi])
+            w_parts.append(pmults[lo:hi] * mq)
         if not docs_parts:
             return None
         docs = np.concatenate(docs_parts)
-        sizes = np.concatenate(sizes_parts)
-        w = np.concatenate(w_parts)
         uniq, inv = np.unique(docs, return_inverse=True)
-        overlap = np.zeros(len(uniq), dtype=np.int64)
-        np.add.at(overlap, inv, w)
-        size_b = np.zeros(len(uniq), dtype=np.int32)
-        size_b[inv] = sizes  # a doc has exactly one size
+        # float64 sums of small ints are exact: cast back loses nothing
+        overlap = np.bincount(inv, weights=np.concatenate(w_parts)).astype(np.int64)
+        size_b = np.empty(len(uniq), dtype=np.int64)
+        size_b[inv] = np.concatenate(sizes_parts)  # a doc has exactly one size
         return uniq, size_b, overlap
 
     # -- queries --------------------------------------------------------------
@@ -263,7 +275,7 @@ class HotReplica:
         the left dictionary join: missing doc → None)."""
         terms = tokenize(query, self.config)
         size_a = len(terms)
-        if size_a == 0:
+        if size_a == 0 or k < 1:
             return []
         min_b = max(int(metric.min_y_py(alpha, size_a)), 1)
         max_b = int(metric.max_y_py(alpha, size_a))
@@ -271,22 +283,19 @@ class HotReplica:
         if acc is None:
             return []
         uniq, size_b, overlap = acc
-        tcache: dict[int, int] = {}
-        heap_key = []
-        for i in range(len(uniq)):
-            b = int(size_b[i])
-            t = tcache.get(b)
-            if t is None:
-                t = int(metric.threshold_py(alpha, size_a, b))
-                tcache[b] = t
-            ov = int(overlap[i])
-            # segment validity + CountFilter — same predicate as the plan
-            if t < 1 or t > size_a or t > b or ov < t:
-                continue
-            score = metric.similarity_py(ov, size_a, b)
-            heap_key.append((-score, int(uniq[i])))
-        top = heapq.nsmallest(k, heap_key)  # (= score desc, doc_id asc)
-        return [(-ns, self._values.get(d)) for ns, d in top]
+        t = metric.threshold_np(alpha, size_a, size_b)
+        # segment validity + CountFilter — same predicate as the plan
+        ok = (t >= 1) & (t <= size_a) & (t <= size_b) & (overlap >= t)
+        docs = uniq[ok]
+        neg = -metric.similarity_np(overlap[ok], size_a, size_b[ok])
+        if len(neg) > k:  # keep every candidate tied with the k-th score
+            tie = neg <= np.partition(neg, k - 1)[k - 1]
+            docs, neg = docs[tie], neg[tie]
+        top = np.lexsort((docs, neg))[:k]  # (= score desc, doc_id asc)
+        return [
+            (-ns, self._values.get(d))
+            for ns, d in zip(neg[top].tolist(), docs[top].tolist())
+        ]
 
     def autocomplete(self, query: str, k: int) -> list:
         """First-k values in ascending doc_id order — identical to
@@ -294,12 +303,19 @@ class HotReplica:
         head-only query grams reaches |grams|, sizes ≥ |grams|."""
         terms = tokenize(query, self.config, head_only=True)
         size_a = len(terms)
-        if size_a == 0:
+        if size_a == 0 or k < 1:
             return []
         acc = self._accumulate(Counter(terms), size_a, None)
         if acc is None:
             return []
         uniq, _, overlap = acc
-        matched = uniq[overlap >= size_a]
-        first = heapq.nsmallest(k, matched.tolist())
-        return [self._values.get(d) for d in first]
+        # np.unique returns doc_ids ascending: the first k matches are the
+        # k smallest ids
+        first = uniq[overlap >= size_a][:k]
+        return [self._values.get(d) for d in first.tolist()]
+
+
+def _size_sorted(sizes: np.ndarray, docs: np.ndarray, mults: np.ndarray) -> tuple:
+    """One term's posting list reordered by (size, doc_id)."""
+    order = np.lexsort((docs, sizes))
+    return sizes[order], docs[order], mults[order]

@@ -218,3 +218,29 @@ def test_warm_service_warms_all_and_tolerates_oversized_entries():
         ("warm", "cars"),
         ("replica", "cars"),
     ]
+
+
+def test_warm_service_logs_refused_replica(spark, monkeypatch, caplog):
+    """An entry over the replica's postings bound is logged (entry name and
+    bound), not silently skipped, and keeps serving on the Spark path."""
+    import logging
+
+    from jobs.http_service_job import warm_service
+    from suggest_spark.functions.metrics import JACCARD
+    from suggest_spark.operators.service import SuggestService
+    from suggest_spark.serving import replica
+
+    svc = SuggestService(spark)
+    cars = ["Nissan March", "Nissan Juke", "Nissan Maxima"]
+    svc.add_ram_index(
+        "cars", spark.createDataFrame(list(enumerate(cars)), "doc_id long, value string")
+    )
+    monkeypatch.setattr(replica, "DEFAULT_MAX_POSTINGS", 1)
+    with caplog.at_level(logging.WARNING, logger="jobs.http_service_job"):
+        warm_service(svc)
+    refused = [r.getMessage() for r in caplog.records if r.name == "jobs.http_service_job"]
+    assert len(refused) == 1
+    assert "'cars'" in refused[0] and "max_postings=1" in refused[0]
+    assert svc._entries["cars"].replica is None
+    got = svc.suggest("cars", "Nissan ma", JACCARD, 0.5, 2)
+    assert [v for _, v in got] == ["Nissan Maxima", "Nissan March"]

@@ -97,3 +97,40 @@ def test_duckdb_sql_matches_python():
                 assert s == m.similarity_py(o, sa, sb), (name, a, sa, sb)
                 assert mn == m.min_y_py(a, sa)
                 assert mx == m.max_y_py(a, sa)
+
+
+def _np_grid():
+    """(size_a, size_b) pairs: every pair in 1..64, plus sizes near
+    MAX_INT16 and past √(2³¹) (46341² overflows int32)."""
+    from suggest_spark.functions.metrics import MAX_INT16
+
+    small = [(a, b) for a in range(1, 65) for b in range(1, 65)]
+    big = [(MAX_INT16, MAX_INT16), (MAX_INT16 - 1, MAX_INT16), (3, MAX_INT16),
+           (46341, 46341), (46341, MAX_INT16)]
+    return small + big
+
+
+@pytest.mark.parametrize("name", list(METRICS))
+def test_numpy_forms_bit_identical_to_python(name):
+    """threshold_np / similarity_np are the replica's vectorized scoring: the
+    same IEEE operation order as *_py, so equality is exact (==, not
+    approx), with int32 size arrays as the replica stores them."""
+    import numpy as np
+
+    m = METRICS[name]
+    pairs = _np_grid()
+    sa = np.array([a for a, _ in pairs], np.int32)
+    sb = np.array([b for _, b in pairs], np.int32)
+    for alpha in np.round(np.arange(0.1, 1.0001, 0.05), 2).tolist():
+        got = m.threshold_np(alpha, sa, sb)
+        want = [m.threshold_py(alpha, a, b) for a, b in pairs]
+        assert got.dtype == np.int64 and got.tolist() == want, (name, alpha)
+        # the replica's call shape: a Python-int query size over an array
+        got = m.threshold_np(alpha, 46341, sb)
+        assert got.tolist() == [m.threshold_py(alpha, 46341, b) for b in sb.tolist()]
+
+    rows = [(o, a, b) for a, b in pairs for o in range(1, min(a, b) + 1)]
+    ov, ra, rb = (np.array(c, np.int64) for c in zip(*rows))
+    got = m.similarity_np(ov, ra.astype(np.int32), rb.astype(np.int32))
+    want = [m.similarity_py(o, a, b) for o, a, b in rows]
+    assert got.dtype == np.float64 and got.tolist() == want, name

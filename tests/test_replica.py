@@ -213,6 +213,16 @@ def test_warm_value_map_path_identical(spark):
     assert [svc.suggest("cars", q, COSINE, 0.4, 4) for q in MULTISET_QUERIES] == golden
 
 
+def _assert_size_sorted(replica):
+    """Every posting list is strictly ordered by (size, doc_id) — the order
+    the LengthFilter searchsorted slice relies on (_replica_internals sorts
+    before comparing, so it cannot see a list that lost this order)."""
+    for t, (s, d, m) in replica._postings.items():
+        assert (s.dtype, d.dtype, m.dtype) == (np.int32, np.int64, np.int32), t
+        key = list(zip(s.tolist(), d.tolist()))
+        assert all(a < b for a, b in zip(key, key[1:])), t
+
+
 def _replica_internals(replica):
     """Canonical (term -> sorted (size, doc, mult) triples) for equality."""
     return {
@@ -280,6 +290,8 @@ def test_replica_patched_chain_and_empty_value(spark):
     )
     r1 = parent.patched([(7, "lada niva")], [0])
     r2 = r1.patched([(7, "lada niva travel"), (8, "")], [1])
+    for r in (parent, r1, r2):
+        _assert_size_sorted(r)
 
     final = {i: v for i, v in enumerate(MULTISET_VALS) if i not in (0, 1)}
     final[7] = "lada niva travel"
@@ -420,12 +432,14 @@ def test_replica_patched_random_sweep(spark):
         rep = HotReplica.from_frames(
             build_ngram_index(base, config=DEFAULT_CONFIG), base, DEFAULT_CONFIG
         )
+        _assert_size_sorted(rep)
         for _ in range(3):  # chain of patches
             ups = [
                 (int(rng.randint(0, 12)), rand_val()) for _ in range(rng.randint(0, 4))
             ]
             dels = [int(rng.randint(0, 12)) for _ in range(rng.randint(0, 3))]
             rep = rep.patched(ups, dels)
+            _assert_size_sorted(rep)
             for d in set(dels) | {d for d, _ in ups}:
                 state.pop(d, None)
             for d, v in ups:
@@ -503,3 +517,84 @@ def test_http_routes_identical_with_replica_enabled(spark):
     # error mapping unchanged through the replica tier
     assert client.get("/suggest/nope/x/", query_string=qs).status_code == 500
     svc.remove("cars")
+
+
+def test_replica_from_frames_posting_order(spark, multiset_setup):
+    """from_frames stores each term's list sorted by (size, doc_id), on the
+    duplicate-gram fixture and on a synthetic dictionary whose Spark
+    aggregation hands rows over in arbitrary order."""
+    from suggest_spark.sources.synth import cars_synth
+
+    _assert_size_sorted(multiset_setup[2])
+    vals = cars_synth(300)
+    d = spark.createDataFrame(list(enumerate(vals)), "doc_id long, value string")
+    replica = HotReplica.from_frames(build_ngram_index(d, config=DEFAULT_CONFIG), d)
+    assert max(len(p[1]) for p in replica._postings.values()) > 50
+    _assert_size_sorted(replica)
+
+
+#: more candidates than k share the k-th score: 7 copies of the query value,
+#: 10 copies of a near variant, plus near variants with distinct scores
+TIE_VALS = ["nissan march"] * 7 + ["nissan marc"] * 10 + [
+    "nissan marcha",
+    "nissan mar",
+    "nissan maxima",
+    "nissan micra",
+    "lada niva",
+]
+TIE_QUERIES = ["nissan march", "nissan marc", "nissan marcy", "nissan"]
+
+
+@pytest.fixture(scope="module")
+def tie_setup(spark):
+    """TIE_VALS under shuffled (non-contiguous) doc_ids.  The index holds the
+    plain values; the dictionary tags each value with its doc_id, so equal
+    result rows also pin the order inside a tie."""
+    ids = np.random.RandomState(3).permutation(100)[: len(TIE_VALS)].tolist()
+    plain = spark.createDataFrame(list(zip(ids, TIE_VALS)), "doc_id long, value string")
+    d = spark.createDataFrame(
+        [(i, f"{v}#{i}") for i, v in zip(ids, TIE_VALS)], "doc_id long, value string"
+    )
+    index = build_ngram_index(plain, config=DEFAULT_CONFIG).cache()
+    index.count()
+    return d, index, HotReplica.from_frames(index, d, DEFAULT_CONFIG)
+
+
+def test_replica_topk_ties_match_spark(spark, tie_setup):
+    """The k-th score is shared by more candidates than fit: the replica's
+    partition top-k must return exactly the Spark plan's rows — same scores,
+    doc_id asc inside the tie — for every metric and several k."""
+    d, index, replica = tie_setup
+    qdf = spark.createDataFrame(
+        list(enumerate(TIE_QUERIES)), "query_id long, query string"
+    )
+    cut_ties = 0
+    for metric in METRICS.values():
+        for alpha in (0.3, 0.7):
+            for k in (3, 5, 9):
+                rows = suggest_topk(
+                    index, qdf, metric, alpha, k, DEFAULT_CONFIG, dictionary=d
+                ).collect()
+                want = {}
+                for r in rows:
+                    want.setdefault(r["query_id"], []).append((r["score"], r["value"]))
+                for i, q in enumerate(TIE_QUERIES):
+                    got = replica.suggest(q, metric, alpha, k)
+                    assert got == want.get(i, []), (metric.name, alpha, k, q)
+                    if len(got) == k:  # did the cut fall inside a tie?
+                        ranked = replica.suggest(q, metric, alpha, len(TIE_VALS))
+                        kth = got[-1][0]
+                        cut_ties += sum(s == kth for s, _ in ranked) > sum(
+                            s == kth for s, _ in got
+                        )
+    assert cut_ties > 20, "fixture must cut through ties at the k-th score"
+
+
+def test_replica_autocomplete_more_matches_than_k(spark, tie_setup):
+    """Autocomplete with more matching docs than k returns the k smallest
+    doc_ids, like autocomplete_firstk."""
+    d, index, replica = tie_setup
+    for q, k in (("nissan", 4), ("nissan mar", 6), ("niss", 20)):
+        want = _spark_autocomplete(spark, index, d, q, k)
+        assert len(want) == k
+        assert replica.autocomplete(q, k) == want, (q, k)
