@@ -26,6 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from suggest_spark.plans.session import get_spark
 from suggest_spark.serving import create_app, service_from_config
 
+log = logging.getLogger(__name__)
+
 
 def write_pid_file(pid_path: str | None) -> None:
     """app.go:94-109 writePIDFile."""
@@ -70,11 +72,13 @@ def install_sighup_reindex(reindex_job, background: bool = True) -> dict:
         # clear BEFORE the job reads config: a signal set after this point
         # reflects a change the current run may have missed → one more pass
         wake.clear()
+        t0 = time.monotonic()
         try:
             reindex_job()
-            print("Reindex done!")
-        except Exception as e:  # the Go loop logs and keeps serving
-            print(f"Fail to reload index {e}")
+        except Exception:  # the Go loop logs and keeps serving
+            log.exception("reindex failed; still serving the previous index")
+        else:
+            log.info("reindex done in %.2f s", time.monotonic() - t0)
 
     stopped = threading.Event()
 
@@ -86,13 +90,13 @@ def install_sighup_reindex(reindex_job, background: bool = True) -> dict:
             idle.clear()
             try:
                 _run_once()
-            except BaseException as e:  # noqa: BLE001 — the worker must not die
+            except BaseException:  # noqa: BLE001 — the worker must not die
                 # SystemExit/KeyboardInterrupt raised inside reindex_job would
                 # otherwise kill the ONLY worker, after which every future
                 # SIGHUP sets the event into a void and the service serves a
                 # stale index forever (the round-3 design re-spawned workers
                 # per signal and so self-healed; this one must be immortal)
-                print(f"Fail to reload index {e!r}")
+                log.exception("reindex aborted; the reindex worker keeps running")
             finally:
                 # never park with work pending or report idle too early
                 if not wake.is_set():
@@ -152,7 +156,7 @@ def warm_service(service) -> None:
         try:
             service.enable_hot_replica(name)
         except ValueError as exc:  # corpus-scale entry: coalesced Spark path
-            logging.getLogger(__name__).warning(
+            log.warning(
                 "hot replica refused for %r, serving it on the Spark path: %s", name, exc
             )
 

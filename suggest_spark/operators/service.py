@@ -48,6 +48,35 @@ from .suggest import autocomplete_firstk, suggest_topk_auto
 DEFAULT_VALUE_MAP_MAX_ROWS = 2_000_000
 
 
+def _cached_by_doc(index: DataFrame) -> DataFrame:
+    """The served index's one cached layout: hash-partitioned by ``doc_id``.
+
+    ScanCount + CountFilter is a per-document sum, so over this layout the
+    broadcast posting join keeps ``HashPartitioning(doc_id)`` and the
+    ``groupBy(query_id, size_a, doc_id, size)`` aggregates each partition
+    in place — the only shuffle left is the k-row top-k merge on
+    ``query_id`` (suggest.py "Scale notes").  Lazy: the caller materializes
+    it."""
+    n = index.sparkSession.sparkContext.defaultParallelism
+    return index.repartition(n, "doc_id").cache()
+
+
+def _query_frame(spark: SparkSession, queries: list[str]) -> DataFrame:
+    """``(query_id, query)`` for a batch, built from an Arrow table: a
+    JVM-side local relation.  A row-list ``createDataFrame`` would go
+    through a Python RDD, starting Python workers in every job that
+    broadcasts the batch."""
+    import pyarrow as pa
+
+    table = pa.table(
+        {
+            "query_id": pa.array(range(len(queries)), pa.int64()),
+            "query": pa.array(queries, pa.string()),
+        }
+    )
+    return spark.createDataFrame(table, "query_id long, query string")
+
+
 def _collect_hot_delta(
     new_docs: DataFrame, deleted_ids: DataFrame | None, max_rows: int
 ):
@@ -167,8 +196,12 @@ class SuggestService:
         dictionary: DataFrame,
         config: IndexConfig = DEFAULT_CONFIG,
     ) -> None:
+        """RAM driver: build the index and cache it in the same
+        ``doc_id``-partitioned layout :meth:`warm` gives a DISC entry
+        (:func:`_cached_by_doc`), so suggest aggregates without a shuffle
+        on either driver."""
         with self._mutate:
-            index = build_ngram_index(dictionary, config=config).cache()
+            index = _cached_by_doc(build_ngram_index(dictionary, config=config))
             index.count()  # materialize before the swap, like builder.Build()
             self._swap(name, _Entry(dictionary, index, config))
 
@@ -592,18 +625,25 @@ class SuggestService:
         # CALLER cached (RAM/DISC add paths) are left alone (owns_dict).
         # blocking=False: an in-flight query still holding the old plan
         # recomputes from the immutable lineage instead of failing.
-        # identity guard: a metadata-only swap (refresh_stats) reuses the
-        # SAME index/dictionary objects — unpersisting them would evict the
-        # cache out from under the entry just installed.
         if old is not None:
-            if old.index is not entry.index and old.index.is_cached:
+            if old.index.is_cached and not self._still_served(old.index):
                 old.index.unpersist(blocking=False)
             if (
                 old.owns_dict
-                and old.dictionary is not entry.dictionary
                 and old.dictionary.is_cached
+                and not self._still_served(old.dictionary)
             ):
                 old.dictionary.unpersist(blocking=False)
+
+    def _still_served(self, frame: DataFrame) -> bool:
+        """True when a registered entry serves a cached frame with
+        ``frame``'s plan — the frame itself after a metadata-only swap
+        (refresh_stats), or an equal plan: Spark keeps ONE cache per plan,
+        so two entries opened on the same snapshot share it, and releasing
+        one entry's frame would evict the other's."""
+        with self._lock:
+            live = [f for e in self._entries.values() for f in (e.index, e.dictionary)]
+        return any(f.is_cached and (f is frame or f.sameSemantics(frame)) for f in live)
 
     def _get(self, name: str) -> _Entry:
         with self._lock:
@@ -619,7 +659,8 @@ class SuggestService:
         """Unregister ``name`` and RELEASE its serving state: unpersists the
         entry's cached index and dictionary (including caches warm() pinned
         — callers that handed in a cached dictionary and still use it
-        elsewhere should not rely on it staying cached) and drops the hot
+        elsewhere should not rely on it staying cached; a cache another
+        registered entry still serves is kept) and drops the hot
         replica / value map with the entry.  The teardown counterpart of
         the add_* registrations (benchmarks and service shutdown both need
         it; reaching into the registry from outside would bypass the
@@ -629,10 +670,9 @@ class SuggestService:
                 e = self._entries.pop(name, None)
             if e is None:
                 raise KeyError(f"unknown dictionary: {name!r}")
-            if e.index.is_cached:
-                e.index.unpersist(blocking=True)
-            if e.dictionary.is_cached:
-                e.dictionary.unpersist(blocking=True)
+            for frame in (e.index, e.dictionary):
+                if frame.is_cached and not self._still_served(frame):
+                    frame.unpersist(blocking=True)
 
     def warm(
         self,
@@ -658,9 +698,18 @@ class SuggestService:
         For a DISC entry this holds the served snapshot hot
         (MEMORY_AND_DESERIALIZED with disk spill — the Spark analogue of the
         reference's mmap-resident index, ngram_index_test.go:112-139).
+        The index is cached hash-partitioned by ``doc_id``
+        (:func:`_cached_by_doc`, the layout ``add_ram_index`` caches too) and
+        swapped into the entry: the posting join keeps that partitioning,
+        so the per-document ScanCount aggregates without a shuffle and only
+        the k-row top-k merge crosses partitions.  Scale caveat: the
+        repartition is a one-off shuffle of the whole index, paid here at
+        warm time, not per request.
         Registration-time cost, not request-time: jobs/http_service_job
-        runs it per dictionary at boot and after every reindex/upsert swap
-        (a swap installs fresh uncached frames, so re-warm after mutating).
+        runs it per dictionary at boot and after every reindex/upsert swap.
+        A mutator swap installs fresh uncached frames, and ``_swap``
+        unpersists the partitioned cache it replaces (unless another entry
+        still serves it), so re-warm after mutating.
 
         When the dictionary has ≤ ``value_map_max_rows`` rows it is also
         collected into a driver-side ``{doc_id: value}`` map, after which
@@ -676,8 +725,9 @@ class SuggestService:
         with self._mutate:  # value_map must describe the entry it's swapped
             # into — never interleave with an upsert's read-compute-swap
             e = self._get(name)
+            warmed = e
             if not e.index.is_cached:
-                e.index.cache()
+                warmed = dataclasses.replace(warmed, index=_cached_by_doc(e.index))
             if not e.dictionary.is_cached:
                 e.dictionary.cache()
             if e.value_map is None and value_map_max_rows > 0:
@@ -685,10 +735,11 @@ class SuggestService:
                     # one Arrow batch transfer, not a row-at-a-time collect
                     pdf = e.dictionary.select("doc_id", "value").toPandas()
                     vm = dict(zip(pdf["doc_id"].tolist(), pdf["value"].tolist()))
-                    e = dataclasses.replace(
-                        e, value_map=vm, value_map_max_rows=value_map_max_rows
+                    warmed = dataclasses.replace(
+                        warmed, value_map=vm, value_map_max_rows=value_map_max_rows
                     )
-                    self._swap(name, e)
+            if warmed is not e:
+                self._swap(name, warmed)
         timings: dict[str, float] = {}
         t0 = _time.time()
         self.autocomplete_batch(name, [query], topk)
@@ -787,9 +838,7 @@ class SuggestService:
         e = self._get(name)
         if e.replica is not None:
             return [e.replica.suggest(q, metric, similarity, topk) for q in queries]
-        q = self.spark.createDataFrame(
-            list(enumerate(queries)), "query_id long, query string"
-        )
+        q = _query_frame(self.spark, queries)
         rows = suggest_topk_auto(
             e.index, q, metric, similarity, topk, e.config,
             dictionary=None if e.value_map is not None else e.dictionary,
@@ -812,9 +861,7 @@ class SuggestService:
         e = self._get(name)
         if e.replica is not None:
             return [e.replica.autocomplete(q, topk) for q in queries]
-        q = self.spark.createDataFrame(
-            list(enumerate(queries)), "query_id long, query string"
-        )
+        q = _query_frame(self.spark, queries)
         rows = autocomplete_firstk(
             e.index, q, topk, e.config,
             dictionary=None if e.value_map is not None else e.dictionary,

@@ -25,8 +25,14 @@ Key for eviction, which yields output sorted by score desc then doc_id asc
 Scale notes (100 TB design):
 * The query batch is usually ≪ index: the planner broadcasts the exploded
   query-gram side automatically under AQE; we give an explicit hint.
-* The groupBy is a partial-aggregated hash shuffle on (query_id, doc_id);
-  no per-row Python anywhere in the plan.
+* ScanCount is a per-document sum.  Over an index hash-partitioned by
+  doc_id (the layout the serving tier caches, service._cached_by_doc) the
+  broadcast join keeps that partitioning, so the groupBy runs partial and
+  final aggregation in one stage with no shuffle; WindowGroupLimit then
+  cuts each partition to ≤ k rows per query, and the only shuffle is that
+  k-row top-k merge on query_id.  Over an unpartitioned index the groupBy
+  is a partial-aggregated hash shuffle on (query_id, doc_id).  No per-row
+  Python anywhere in the plan.
 * Segment-validity predicates (threshold==0 / > size_a / > size_b skip the
   whole segment, suggester.go:73-77) are applied as post-aggregation
   filters — identical semantics because they depend only on (size_a, size).

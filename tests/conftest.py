@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -16,3 +17,31 @@ def spark():
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@contextmanager
+def _job_group(sc, group):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def _rdd_names(sc, group) -> list[str]:
+    """Names of every RDD in the stages of the jobs run under ``group``,
+    from the status store's per-stage operation graphs."""
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    names = []
+
+    def walk(cluster):
+        nodes, kids = cluster.childNodes(), cluster.childClusters()
+        names.extend(nodes.apply(i).name() for i in range(nodes.size()))
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    for j in tracker.getJobIdsForGroup(group):
+        for s in tracker.getJobInfo(j).stageIds:
+            walk(store.operationGraphForStage(s).rootCluster())
+    return names

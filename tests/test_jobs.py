@@ -244,3 +244,33 @@ def test_warm_service_logs_refused_replica(spark, monkeypatch, caplog):
     assert svc._entries["cars"].replica is None
     got = svc.suggest("cars", "Nissan ma", JACCARD, 0.5, 2)
     assert [v for _, v in got] == ["Nissan Maxima", "Nissan March"]
+
+
+def test_sighup_reindex_logs_done_and_failure(caplog):
+    """The reload loop logs a finished reindex at INFO and a failed one with
+    its traceback, and keeps serving after the failure."""
+    import logging
+    import signal
+
+    from jobs.http_service_job import install_sighup_reindex
+
+    runs = []
+
+    def reindex_job():
+        runs.append(1)
+        if len(runs) == 2:
+            raise RuntimeError("warehouse unreachable")
+
+    old = signal.getsignal(signal.SIGHUP)
+    try:
+        install_sighup_reindex(reindex_job, background=False)
+        with caplog.at_level(logging.INFO, logger="jobs.http_service_job"):
+            os.kill(os.getpid(), signal.SIGHUP)
+            os.kill(os.getpid(), signal.SIGHUP)
+    finally:
+        signal.signal(signal.SIGHUP, old)
+    recs = [r for r in caplog.records if r.name == "jobs.http_service_job"]
+    assert len(runs) == 2
+    assert [r.levelno for r in recs] == [logging.INFO, logging.ERROR]
+    assert recs[0].getMessage().startswith("reindex done in ")
+    assert recs[1].exc_info and "warehouse unreachable" in str(recs[1].exc_info[1])

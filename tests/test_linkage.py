@@ -3,9 +3,9 @@ components, checkpoint/resume, and the pairwise-F1 north-rule criterion."""
 
 import os
 from collections import Counter
-from contextlib import contextmanager
 
 import pytest
+from conftest import _job_group, _rdd_names
 from pyspark.sql import functions as F
 
 from suggest_spark.functions.analysis import tokenize
@@ -231,34 +231,6 @@ def test_driver_unionfind_id_types(spark, id_type, ids, n_edges):
     norm = bytes if id_type == "binary" else (lambda x: x)
     got = {norm(r["rid"]): norm(r["cluster_id"]) for r in out.collect()}
     assert got == _cc_oracle(edges)
-
-
-@contextmanager
-def _job_group(sc, group):
-    sc.setJobGroup(group, group)
-    try:
-        yield
-    finally:
-        sc.setJobGroup(None, None)
-
-
-def _rdd_names(sc, group) -> list[str]:
-    """Names of every RDD in the stages of the jobs run under ``group``,
-    from the status store's per-stage operation graphs."""
-    tracker = sc.statusTracker()
-    store = sc._jsc.sc().statusStore()
-    names = []
-
-    def walk(cluster):
-        nodes, kids = cluster.childNodes(), cluster.childClusters()
-        names.extend(nodes.apply(i).name() for i in range(nodes.size()))
-        for i in range(kids.size()):
-            walk(kids.apply(i))
-
-    for j in tracker.getJobIdsForGroup(group):
-        for s in tracker.getJobInfo(j).stageIds:
-            walk(store.operationGraphForStage(s).rootCluster())
-    return names
 
 
 @pytest.mark.parametrize("n_edges", [4, 0])

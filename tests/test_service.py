@@ -246,3 +246,204 @@ def test_upsert_without_dict_artifact_survives_restart(spark, tmp_path):
         for _, v in svc3.suggest("cars", "honda fit", JACCARD, 0.1, 5)
     }
     assert "Honda Fit" in vals and "Mazda Demio" not in vals
+
+
+# -- warm Spark-tier serving: Arrow query frames over a doc_id-partitioned
+# index ------------------------------------------------------------------
+
+#: a 256-query warm batch runs 4 jobs: the query-gram broadcast, the top-k
+#: shuffle's map stage, the query re-attach broadcast and the result stage.
+#: A fifth job means the ScanCount aggregation shuffle is back.
+WARM_BATCH_MAX_JOBS = 4
+
+
+@pytest.fixture(scope="module")
+def warm_svc(spark, tmp_path_factory):
+    """One DISC index served four ways: "warm" (warm(): doc_id-partitioned
+    cache + value map), "cold" (re-opened, never warmed: parquet scan and
+    dictionary broadcast), "ram" (add_ram_index) and "replica"."""
+    from test_replica import MULTISET_VALS
+
+    from suggest_spark.sources.synth import cars_synth
+
+    vals = SERVICE_CARS + MULTISET_VALS + cars_synth(300)
+    d = spark.createDataFrame(list(enumerate(vals)), "doc_id long, value string")
+    path = str(tmp_path_factory.mktemp("warm_svc") / "idx")
+    svc = SuggestService(spark)
+    svc.add_disc_index("warm", d, path)
+    svc.warm("warm")
+    svc.add_disc_index("cold", d, path, rebuild=False)
+    svc.add_ram_index("ram", d)
+    svc.add_disc_index("replica", d, path, rebuild=False)
+    svc.enable_hot_replica("replica")
+    return svc, vals, path, d
+
+
+def _warm_queries(vals) -> list[str]:
+    from test_replica import MULTISET_QUERIES
+
+    # misspelled synth values, the Cyrillic duplicate-gram fixtures and an
+    # empty string, all through the Arrow query frame
+    return [q for q, _ in GOLDENS] + MULTISET_QUERIES + [
+        v[:-2] + v[-1] for v in vals[20:60]
+    ] + [""]
+
+
+@pytest.mark.parametrize("name, shuffled", [("warm", False), ("cold", True)])
+def test_warm_index_aggregates_without_exchange(spark, warm_svc, name, shuffled):
+    """Over the warmed (doc_id-partitioned) index the final AQE plan of
+    suggest_topk runs partial and final HashAggregate in one stage; the
+    unwarmed entry is the control that shows the probe sees an exchange."""
+    from suggest_spark.functions.metrics import JACCARD
+    from suggest_spark.operators.service import _query_frame
+    from suggest_spark.operators.suggest import suggest_topk
+
+    svc, vals, _, _ = warm_svc
+    e = svc._get(name)
+    q = _query_frame(spark, _warm_queries(vals))
+    df = suggest_topk(e.index, q, JACCARD, 0.5, 5, e.config, ordered=False)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    final = next(i for i, line in enumerate(plan) if "functions=[count(1)]" in line)
+    partial = next(i for i, line in enumerate(plan) if "functions=[partial_count(1)]" in line)
+    between = plan[final + 1:partial]
+    assert final < partial
+    assert any("Exchange" in line for line in between) == shuffled, "\n".join(plan)
+
+
+def test_warm_batches_start_no_python_worker(spark, warm_svc):
+    """suggest_batch and autocomplete_batch build their query frame from
+    Arrow: no job of either runs a Python RDD."""
+    from conftest import _job_group, _rdd_names
+
+    from suggest_spark.functions.metrics import JACCARD
+
+    sc = spark.sparkContext
+    svc, vals, _, _ = warm_svc
+    with _job_group(sc, "warm_batch_python_rdd_control"):
+        # control: a row-list createDataFrame does run a Python RDD
+        spark.createDataFrame([(1,)], "x long").collect()
+    assert "PythonRDD" in _rdd_names(sc, "warm_batch_python_rdd_control")
+
+    queries = _warm_queries(vals)
+    with _job_group(sc, "warm_batches"):
+        svc.suggest_batch("warm", queries, JACCARD, 0.5, 5)
+        svc.autocomplete_batch("warm", queries, 5)
+    names = _rdd_names(sc, "warm_batches")
+    assert names and "PythonRDD" not in names, names
+
+
+def test_warm_batch_job_budget(spark, warm_svc):
+    from conftest import _job_group
+
+    from suggest_spark.functions.metrics import JACCARD
+
+    sc = spark.sparkContext
+    svc, vals, _, _ = warm_svc
+    queries = [vals[i % len(vals)][:-1] for i in range(256)]
+    svc.suggest_batch("warm", queries, JACCARD, 0.5, 5)
+    with _job_group(sc, "warm_batch_256"):
+        out = svc.suggest_batch("warm", queries, JACCARD, 0.5, 5)
+    assert len(out) == 256 and all(out)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("warm_batch_256"))
+    assert n_jobs <= WARM_BATCH_MAX_JOBS, n_jobs
+
+
+@pytest.mark.parametrize("alpha", [0.3, 0.7])
+@pytest.mark.parametrize("k", [3, 5])
+def test_warm_cold_ram_replica_rows_identical(warm_svc, alpha, k):
+    from suggest_spark.functions.metrics import METRICS
+
+    svc, vals, _, _ = warm_svc
+    queries = _warm_queries(vals)
+    hits = 0
+    for metric in METRICS.values():
+        want = svc.suggest_batch("cold", queries, metric, alpha, k)
+        for name in ("warm", "ram", "replica"):
+            got = svc.suggest_batch(name, queries, metric, alpha, k)
+            assert got == want, (name, metric.name, alpha, k)
+        hits += sum(bool(r) for r in want)
+        assert want[-1] == []  # the empty query
+    assert hits > len(METRICS) * len(queries) // 2
+
+
+def test_warm_cold_ram_replica_autocomplete_identical(warm_svc):
+    svc, vals, _, _ = warm_svc
+    prefixes = ["NISSAN", "kamaz", "lada", "лада", "лада к", "toy", "zzz", ""]
+    prefixes += [v[:4] for v in vals[30:50]]
+    for k in (3, 5):
+        want = svc.autocomplete_batch("cold", prefixes, k)
+        assert sum(len(r) == k for r in want) > len(prefixes) // 2
+        for name in ("warm", "ram", "replica"):
+            assert svc.autocomplete_batch(name, prefixes, k) == want, (name, k)
+
+
+def test_warm_empty_batch(warm_svc):
+    from suggest_spark.functions.metrics import JACCARD
+
+    svc = warm_svc[0]
+    for name in ("warm", "cold", "ram", "replica"):
+        assert svc.suggest_batch(name, [], JACCARD, 0.5, 3) == []
+        assert svc.autocomplete_batch(name, [], 3) == []
+
+
+def test_warm_prefix_plan_with_stats_armed(spark, warm_svc, monkeypatch):
+    """refresh_stats after warm arms the planner over the partitioned
+    cache; the prefix plan it is forced onto returns the cold plain plan's
+    rows."""
+    from suggest_spark.functions.metrics import METRICS
+    from suggest_spark.operators import suggest as suggest_mod
+
+    svc, vals, path, d = warm_svc
+    svc.add_disc_index("stats", d, path, rebuild=False)
+    svc.warm("stats")
+    svc.refresh_stats("stats")
+    assert svc._get("stats").stats is not None and svc._get("stats").index.is_cached
+
+    calls = []
+    prefix = suggest_mod.suggest_topk_prefix
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return prefix(*a, **kw)
+
+    monkeypatch.setattr(suggest_mod, "select_suggest_plan", lambda *a, **kw: "prefix")
+    monkeypatch.setattr(suggest_mod, "suggest_topk_prefix", spy)
+    queries = _warm_queries(vals)
+    for metric in METRICS.values():
+        for alpha in (0.3, 0.7):
+            want = svc.suggest_batch("cold", queries, metric, alpha, 5)
+            assert svc.suggest_batch("stats", queries, metric, alpha, 5) == want, (
+                metric.name, alpha,
+            )
+    assert len(calls) == len(METRICS) * 2
+
+
+def test_swap_keeps_a_cache_another_entry_serves(spark, tmp_path):
+    """Two entries opened on one snapshot share Spark's cache of the warmed
+    index (one cache per plan): an upsert swap of one must not evict the
+    other's, and removing the last holder releases it."""
+    from suggest_spark.functions.metrics import JACCARD
+
+    d = spark.createDataFrame(list(enumerate(SERVICE_CARS)), "doc_id long, value string")
+    path = str(tmp_path / "idx")
+    svc = SuggestService(spark)
+    svc.add_disc_index("a", d, path)
+    svc.warm("a", metrics=[JACCARD])
+    svc.add_disc_index("b", d, path, rebuild=False)
+    svc.warm("b", metrics=[JACCARD])
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached(frame) -> bool:
+        return cache.lookupCachedData(frame._jdf).isDefined()
+
+    b_index = svc._get("b").index
+    assert b_index.sameSemantics(svc._get("a").index) and cached(b_index)
+    svc.upsert_disc_index(
+        "a", spark.createDataFrame([(100, "MAZDA DEMIO")], "doc_id long, value string")
+    )
+    assert cached(b_index)
+    svc.remove("a")
+    assert cached(b_index)
+    svc.remove("b")
+    assert not cached(b_index)
