@@ -1,5 +1,7 @@
-"""Benchmark harness. Prints ONE JSON line:
-{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness.  Writes the full JSON record to
+bench_out/bench_record.json and prints one compact JSON line last:
+{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+ "cpus": N, "record": "<path of the full record>"}
 
 Headline workloads (all on $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1,
 master local[$SPARK_GRAFT_CPUS]):
@@ -43,6 +45,22 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 N_QUERIES = int(os.environ.get("SPARK_GRAFT_N_QUERIES", "1000"))
 # best-of-n reps per segment (sandbox host jitter; see linkage section)
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
+
+
+RECORD_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "bench_out", "bench_record.json"
+)
+HEADLINE_KEYS = ("metric", "value", "unit", "queries", "sf", "cpus")
+
+
+def emit_record(record: dict, path: str = RECORD_PATH) -> None:
+    """Write the full ``record`` to ``path`` and print a compact headline
+    (``HEADLINE_KEYS`` plus the record's path) as the last stdout line, so
+    a capture that keeps only the tail of stdout still parses."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        json.dump(record, f, indent=1)
+    print(json.dumps({**{k: record[k] for k in HEADLINE_KEYS}, "record": path}), flush=True)
 
 
 def _sf(sf_dir: str) -> float:
@@ -525,8 +543,8 @@ def main() -> None:
         "cpus": int(CPUS),
         "detail": extra,
     }
-    print(json.dumps(out))
     spark.stop()
+    emit_record(out)
 
 
 if __name__ == "__main__":

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import sys
 import time
@@ -48,6 +49,8 @@ from suggest_spark.operators.versioned import (
 from suggest_spark.plans.session import get_spark
 from suggest_spark.sources.dictionary import read_line_dictionary
 
+log = logging.getLogger(__name__)
+
 
 def index_config_from_description(desc: dict) -> IndexConfig:
     """IndexDescription JSON → IndexConfig (pkg/suggest/config.go:25-35)."""
@@ -61,7 +64,7 @@ def index_config_from_description(desc: dict) -> IndexConfig:
 
 def run_index_job(spark, desc: dict, base_dir: str) -> dict | None:
     if desc.get("driver", "DISC") != "DISC":
-        print(f"skip processing '{desc['name']}', there is no disc configuration")
+        log.info("skip processing %r, there is no disc configuration", desc["name"])
         return None
     cfg = index_config_from_description(desc)
     source = os.path.join(base_dir, desc["source"])
@@ -114,6 +117,8 @@ def main() -> None:
     ap.add_argument("--base-dir", default=None, help="resolve source/output relative to this dir (default: config dir)")
     ap.add_argument("--master", default=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
     args = ap.parse_args()
+    logging.basicConfig()
+    log.setLevel(logging.INFO)
 
     with open(args.config) as f:
         descriptions = json.load(f)

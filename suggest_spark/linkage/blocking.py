@@ -150,17 +150,6 @@ def encode_records(
     )
 
 
-def max_excess(records: DataFrame) -> int:
-    """Global maximum duplicate excess Δ_max = max over records of
-    msize − set_size (0 unless distinct raw grams normalize to the same
-    padded gram, e.g. a text starting with the same bigram it repeats
-    mid-string)."""
-    row = records.select(
-        F.max(F.size("terms") - F.size(F.array_distinct("terms"))).alias("d")
-    ).first()
-    return int(row["d"] or 0)
-
-
 def prefix_keys(
     encoded: DataFrame,
     metric: Metric,

@@ -346,49 +346,3 @@ def duckdb_simhash_sql(shingles_expr: str) -> str:
         )
         terms.append(f"(CASE WHEN {contrib} > 0 THEN {1 << i} ELSE 0 END)")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    shingles_col: str = "shingles",
-    n_bands: int = 4,
-) -> DataFrame:
-    """(id_a, id_b, hamming) pairs with Hamming distance <= max_hamming.
-
-    Banded: split the 32 bits into ``n_bands`` bands; by pigeonhole any pair
-    within distance < n_bands shares an exact band → equi-join per band, then
-    verify exact popcount.
-    """
-    sh = docs.select(F.col(id_col).alias("id"), simhash32(F.col(shingles_col)).alias("sh"))
-    band_bits = 32 // n_bands
-    mask = (1 << band_bits) - 1
-    bands = sh.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        F.shiftright(F.col("sh"), b * band_bits).bitwiseAND(F.lit(mask)),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bucket"),
-    )
-    a = bands.select("bucket", F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = bands.select("bucket", F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    cand = (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select("id_a", "id_b", hamming.cast("int").alias("hamming")).where(
-        F.col("hamming") <= max_hamming
-    )

@@ -12,7 +12,7 @@ batch Spark computes the exact global answer with one 5-stage plan:
     query grams (exploded, duplicates kept)
       ⋈ index ON term AND size BETWEEN min_y AND max_y     -- LengthFilter ⇒
                                                            -- partition pruning
-      → groupBy(query_id, doc_id, size) count AS overlap   -- ScanCount ≡ J1-J4
+      → groupBy(query_id, doc_id, size) count AS overlap   -- _scan_count ≡ J1-J4
       → HAVING overlap >= T(alpha, size_a, size) AND T valid  -- CountFilter
       → score = 1 − Distance(overlap, size_a, size)
       → row_number OVER (PARTITION BY query_id
@@ -40,7 +40,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, IndexConfig
@@ -48,6 +48,27 @@ from ..functions.metrics import Metric
 from .indexing import doc_term_lists, term_document_frequency, with_terms  # noqa: F401
 # term_document_frequency is re-exported here for API continuity — it lives
 # in indexing.py (single source of truth with write_index_stats)
+
+
+def _scan_count(matches: DataFrame, keys: list[str], t: Column | int) -> DataFrame:
+    """ScanCount + CountFilter: ``(*keys, overlap)`` for every key group
+    with ``overlap >= t`` matches.  ``t`` may read the grouping keys.
+
+    The reference's four T-occurrence mergers — ScanCount
+    (pkg/merger/scan_count.go:7-88), CPMerge (cp_merge.go:9-120), MergeSkip
+    (merge_skip.go:40-151), DivideSkip (divide_skip.go:12-74) — are
+    result-identical by shared goldens (pkg/merger/list_merger_test.go:42-160)
+    and differ only in single-core CPU strategy.  Their distributed form is
+    this one hash aggregation: Catalyst's partial aggregation plays the
+    per-list counting loops, and a ``doc_id``-partitioned input makes the
+    final aggregation local.  With ``t`` = the number of lists it is the
+    exact k-way intersection (pkg/merger/list_intersector.go:17-81).
+    """
+    return (
+        matches.groupBy(*keys)
+        .agg(F.count(F.lit(1)).cast("int").alias("overlap"))
+        .where(F.col("overlap") >= t)
+    )
 
 
 def _query_grams(queries: DataFrame, config: IndexConfig, head_only: bool = False) -> DataFrame:
@@ -106,17 +127,10 @@ def suggest_topk(
         how="inner",
     ).select("query_id", "size_a", "doc_id", "size")
 
-    overlap = joined.groupBy("query_id", "size_a", "doc_id", "size").agg(
-        F.count(F.lit(1)).cast("int").alias("overlap")
-    )
-
     t = metric.threshold(alpha, F.col("size_a"), F.col("size"))
-    candidates = overlap.withColumn("t", t).where(
-        # segment validity (suggester.go:73-77) + CountFilter
-        (F.col("t") >= 1)
-        & (F.col("t") <= F.col("size_a"))
-        & (F.col("t") <= F.col("size"))
-        & (F.col("overlap") >= F.col("t"))
+    candidates = _scan_count(joined, ["query_id", "size_a", "doc_id", "size"], t).where(
+        # segment validity (suggester.go:73-77)
+        (t >= 1) & (t <= F.col("size_a")) & (t <= F.col("size"))
     )
 
     scored = candidates.select(
@@ -432,11 +446,7 @@ def autocomplete_firstk(
         how="inner",
     ).select("query_id", "size_a", "doc_id")
 
-    matched = (
-        joined.groupBy("query_id", "size_a", "doc_id")
-        .agg(F.count(F.lit(1)).cast("int").alias("overlap"))
-        .where(F.col("overlap") >= F.col("size_a"))
-    )
+    matched = _scan_count(joined, ["query_id", "size_a", "doc_id"], F.col("size_a"))
 
     w = Window.partitionBy("query_id").orderBy(F.asc("doc_id"))
     topk = matched.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)

@@ -30,10 +30,9 @@ the new ownership map.
   temp-file + atomic exclusive rename (fsutil.publish_text_atomic), so a
   swap is one filesystem metadata operation, readers never see a torn
   manifest, and concurrent committers of one version cannot corrupt the log
-  (one wins, one raises).  The commit primitive is pluggable
-  (:func:`set_manifest_committer`) so object stores — where no filesystem
-  op is atomic-exclusive — can inject a conditional-put / catalog-lock
-  commit.
+  (one wins, one raises).  On an object store, where no filesystem op is
+  atomic-exclusive, the commit goes through the publisher installed with
+  ``fsutil.set_object_store_publisher``.
 * **Readers never race writers**: a snapshot resolves to an explicit list
   of immutable directories; a rebuild/upsert writes a brand-new ``v=N``
   directory and commits a new manifest — nothing a live query has resolved
@@ -96,13 +95,14 @@ def read_manifest(spark: SparkSession, base: str, version: int | None = None) ->
     """The manifest dict for ``version`` (default: current = highest).
 
     When resolving CURRENT, a manifest that exists but does not parse (a
-    torn or zero-length file — impossible under the rename-based committer,
-    but reachable via a non-atomic injected committer or a pre-round-4 log)
+    torn or zero-length file — impossible under the rename-based commit,
+    but reachable via a non-atomic object-store publisher, an external
+    writer or a pre-round-4 log)
     falls back to the next-lower version: a ONE-step fallback is always a
     consistent read whose data files the grace-period GC still guarantees.
     Deeper fallbacks (several consecutive torn commits) are best-effort —
-    data older than the GC keep-window may be gone; with the default atomic
-    committer this path never executes.  During a fallback, an OLDER
+    data older than the GC keep-window may be gone; with the rename-based
+    commit this path never executes.  During a fallback, an OLDER
     manifest that VANISHES (IO error — a concurrent gc_versions deleted it
     between the listing and the read) steps down too; the same error on the
     NEWEST manifest raises instead — GC never deletes the newest, so that
@@ -119,7 +119,7 @@ def read_manifest(spark: SparkSession, base: str, version: int | None = None) ->
         try:
             return json.loads(fsutil.read_text(spark, _manifest_path(base, v)))
         except ValueError:  # json.JSONDecodeError ⊂ ValueError: a TORN file
-            # (non-atomic injected committer / pre-round-4 log) — never
+            # (non-atomic external writer / pre-round-4 log) — never
             # readable by anyone, so stepping down is always correct
             if v == versions[0]:
                 raise
@@ -140,36 +140,15 @@ def read_manifest(spark: SparkSession, base: str, version: int | None = None) ->
     raise FileNotFoundError(f"no readable manifest under {base}/{_MANIFEST_DIR}")
 
 
-def _default_committer(spark: SparkSession, path: str, text: str) -> None:
-    """HDFS/local manifest commit: temp file + atomic rename, exclusive
-    (fsutil.publish_text_atomic) — readers see a whole manifest or none."""
-    fsutil.publish_text_atomic(spark, path, text, overwrite=False)
-
-
-#: The manifest-commit primitive.  Contract: publish ``text`` at ``path``
-#: all-or-nothing, raising if ``path`` already exists (two committers of the
-#: same version: EXACTLY ONE returns, the rest raise).  The default is
-#: correct on HDFS and local filesystems; object stores lack an atomic
-#: exclusive publish, so an S3 deployment injects a conditional-put /
-#: catalog-lock commit here (e.g. S3 If-None-Match, DynamoDB lock, an
-#: Iceberg catalog) via :func:`set_manifest_committer`.
-_MANIFEST_COMMITTER = _default_committer
-
-
-def set_manifest_committer(committer) -> object:
-    """Install a custom manifest-commit callable ``(spark, path, text)``
-    (see ``_MANIFEST_COMMITTER`` contract); returns the previous one so
-    callers can restore it."""
-    global _MANIFEST_COMMITTER
-    previous = _MANIFEST_COMMITTER
-    _MANIFEST_COMMITTER = committer if committer is not None else _default_committer
-    return previous
-
-
 def _commit(spark: SparkSession, base: str, manifest: dict) -> None:
-    """Atomically publish ``manifest`` as the new current snapshot."""
-    _MANIFEST_COMMITTER(
-        spark, _manifest_path(base, manifest["version"]), json.dumps(manifest, sort_keys=True)
+    """Atomically publish ``manifest`` as the new current snapshot: a whole
+    manifest or none is visible, and of two committers of one version
+    exactly one returns while the other raises ``FileExistsError``."""
+    fsutil.publish_text_atomic(
+        spark,
+        _manifest_path(base, manifest["version"]),
+        json.dumps(manifest, sort_keys=True),
+        overwrite=False,
     )
 
 
@@ -442,10 +421,9 @@ def rebucket_versioned_bucketed_table(
     spark: SparkSession, base: str, new_n_buckets: int
 ) -> dict:
     """Online re-layout of a bucketed table whose corpus outgrew its
-    creation-time ``n_buckets`` — the table analog of the streaming
-    registry's ``migrate_registry_online`` (streaming/dedup.py).  Every other
-    mutator deliberately REUSES the pinned count, so without this a table
-    created at 64 buckets trickle-upserts into ever-fatter buckets forever.
+    creation-time ``n_buckets``.  Every other mutator deliberately REUSES
+    the pinned count, so without this a table created at 64 buckets
+    trickle-upserts into ever-fatter buckets forever.
 
     The current snapshot is rewritten in full under a fresh ``v=N`` at the
     new count and one manifest pinning ``new_n_buckets`` is committed
@@ -541,7 +519,7 @@ def gc_versions(
             # Py4JError) must abort the GC instead — skipping a kept manifest
             # on a flaky read would delete versions it still references.
             # a torn manifest inside the keep window (reachable only via a
-            # non-atomic injected committer or a pre-round-4 log): no reader
+            # non-atomic external writer or a pre-round-4 log): no reader
             # can resolve it (read_manifest falls back past it), so it
             # protects nothing — and GC must keep RUNNING, or every mutator's
             # post-commit GC raises until the torn file ages out

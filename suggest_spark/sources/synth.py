@@ -196,11 +196,6 @@ def url_id_py(url: str) -> bytes:
     return hashlib.md5(url.encode("utf-8")).digest()
 
 
-def rid_hex(rid_col: F.Column) -> F.Column:
-    """Human-readable form of a binary rid (for outputs/debugging)."""
-    return F.lower(F.hex(rid_col))
-
-
 def make_clustered_embeddings(
     spark: SparkSession,
     n_vectors: int,

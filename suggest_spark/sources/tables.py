@@ -54,7 +54,7 @@ def merge_upsert(spark: SparkSession, table: str, updates: DataFrame, key: str =
     """Snapshot-isolated upsert into an Iceberg table via ``MERGE INTO``.
 
     This is the transactional form of every in-place maintenance path in the
-    engine (index upsert, registry compaction, page re-crawl): matched keys
+    engine (index upsert, page re-crawl): matched keys
     are updated, new keys inserted, and concurrent readers keep the previous
     snapshot — no localCheckpoint pin, no versioned-path swap needed
     (operators/versioned.py is the Parquet-only substitute).  Requires the

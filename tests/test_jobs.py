@@ -274,3 +274,19 @@ def test_sighup_reindex_logs_done_and_failure(caplog):
     assert [r.levelno for r in recs] == [logging.INFO, logging.ERROR]
     assert recs[0].getMessage().startswith("reindex done in ")
     assert recs[1].exc_info and "warehouse unreachable" in str(recs[1].exc_info[1])
+
+
+def test_indexer_job_logs_skipped_ram_entry(caplog):
+    """A RAM entry is skipped (as the reference's indexJob does) with an
+    INFO log line naming it, before any Spark work."""
+    import logging
+
+    from jobs.indexer_job import run_index_job
+
+    desc = {"name": "cars", "driver": "RAM", "source": "cars.txt"}
+    with caplog.at_level(logging.INFO, logger="jobs.indexer_job"):
+        assert run_index_job(None, desc, "/nonexistent") is None
+    recs = [r for r in caplog.records if r.name == "jobs.indexer_job"]
+    assert [(r.levelno, r.getMessage()) for r in recs] == [
+        (logging.INFO, "skip processing 'cars', there is no disc configuration")
+    ]

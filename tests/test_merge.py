@@ -1,10 +1,12 @@
 """T-occurrence merge goldens, ported from
 /root/reference/pkg/merger/list_merger_test.go:42-160 (all four reference
-mergers must agree on these; our relational plan must too)."""
+mergers must agree on these).  They run against ``suggest._scan_count``,
+the one ScanCount + CountFilter step that both ``suggest_topk`` and
+``autocomplete_firstk`` serve requests through."""
 
 import pytest
 
-from suggest_spark.operators.merge import intersect_all, t_occurrence_merge
+from suggest_spark.operators.suggest import _scan_count
 
 LISTS_A = [[1, 2, 3], [1, 2], [2, 3], [2]]
 LISTS_B = [
@@ -42,7 +44,7 @@ def _postings_df(spark, lists):
 
 @pytest.mark.parametrize("lists,t,expected", GOLDENS)
 def test_t_occurrence_merge_goldens(spark, lists, t, expected):
-    got = t_occurrence_merge(_postings_df(spark, lists), t).collect()
+    got = _scan_count(_postings_df(spark, lists), ["doc_id"], t).collect()
     actual = {}
     for r in got:
         actual.setdefault(r["overlap"], set()).add(r["doc_id"])
@@ -51,5 +53,5 @@ def test_t_occurrence_merge_goldens(spark, lists, t, expected):
 
 def test_intersection(spark):
     # k-way intersection = threshold == n lists (list_intersector.go:17-81)
-    got = intersect_all(_postings_df(spark, LISTS_A), 4).collect()
+    got = _scan_count(_postings_df(spark, LISTS_A), ["doc_id"], len(LISTS_A)).collect()
     assert {r["doc_id"] for r in got} == {2}

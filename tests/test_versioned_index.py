@@ -139,7 +139,9 @@ def test_manifest_commit_is_exclusive(spark, tmp_path):
         build_ngram_index(spark.createDataFrame(BASE, "doc_id long, value string")), base
     )
     with pytest.raises(Exception):  # second committer of v1 must fail loudly
-        fsutil.create_text_exclusive(spark, f"{base}/_manifests/v00000001.json", "{}")
+        fsutil.publish_text_atomic(
+            spark, f"{base}/_manifests/v00000001.json", "{}", overwrite=False
+        )
 
 
 def test_concurrent_queries_during_disc_rebuild_and_upsert(spark, tmp_path):
