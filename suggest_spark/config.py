@@ -8,6 +8,7 @@ and/or literal character strings (reference: pkg/alphabet/alphabet.go:14-36).
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 #: Named alphabets (reference: pkg/alphabet/english_alphabet.go:9-13,
@@ -39,8 +40,10 @@ def char_class(groups: tuple[str, ...]) -> str:
     return "".join(parts)
 
 
+@functools.cache
 def allowed_char_set(groups: tuple[str, ...]) -> frozenset[str]:
-    """Materialized allowed-rune set for a list of alphabet groups."""
+    """Materialized allowed-rune set for a tuple of alphabet groups — cached:
+    the pure-Python tokenizer asks for it on every call."""
     chars: set[str] = set()
     for group in groups:
         if group == "english":

@@ -10,16 +10,24 @@ DISTRIBUTED (Spark — the only thing that works at corpus scale), then serve
 lone requests from a compact in-process snapshot of it.
 
 :class:`HotReplica` is that snapshot: one Arrow transfer of the entry's
-``(term, size, doc_id, multiplicity)`` postings plus the ``(doc_id, value)``
-dictionary at enable time, then a handful of numpy array operations per
-request — no per-candidate Python:
+``(term, size, doc_id)`` postings plus the ``(doc_id, value)`` dictionary at
+enable time, then a handful of numpy array operations per request — no
+per-candidate Python:
 
-* each term's posting list is stored sorted by ``(size, doc_id)`` (the
-  reference's length segmentation, pkg/index/indices.go:3-14), so the
-  LengthFilter window is a ``searchsorted`` slice, not a full-list mask;
-* ScanCount is ``np.unique`` + ``np.bincount`` over the sliced lists;
-* CountFilter and scoring are the metric's ``threshold_np`` /
-  ``similarity_np`` forms under one boolean mask;
+* every indexed document gets a dense int32 *slot*; two slot-indexed arrays
+  hold its ``doc_id`` (int64) and its size (int32);
+* each term's posting list is a pair of int32 arrays ``(sizes, slots)`` with
+  one entry per OCCURRENCE (the index keeps duplicate grams), sorted by
+  ``(size, slot)`` (the reference's length segmentation,
+  pkg/index/indices.go:3-14) — so the LengthFilter window is a
+  ``searchsorted`` slice, and a posting costs 8 bytes;
+* ScanCount (reference pkg/merger/scan_count.go:7-88, a counter per
+  document that each posting bumps) is ONE ``np.bincount`` over the sliced
+  slot lists, each repeated by the query gram's multiplicity;
+* the CountFilter's floor — the smallest threshold any size in the window
+  can have — cuts the counter array before a candidate exists; the exact
+  segment-validity + CountFilter predicate and scoring then run as the
+  metric's ``threshold_np`` / ``similarity_np`` forms under one mask;
 * top-k is ``np.partition`` (every tie at the k-th score kept) then a
   ``(score desc, doc_id asc)`` lexsort of the survivors.
 
@@ -53,16 +61,19 @@ from __future__ import annotations
 from collections import Counter
 
 import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, IndexConfig
 from ..functions.analysis import tokenize
 
 #: refuse to collect more postings than this into the driver by default
-#: (≈ 16 bytes/posting in numpy + python string keys; 20M ≈ a words.dict×8
-#: dictionary ≈ well under 1 GiB driver RSS)
+#: (8 bytes per posting occurrence in numpy — int32 size + int32 slot — plus
+#: one Python string key per distinct term; 20M ≈ a words.dict×8 dictionary
+#: ≈ well under 1 GiB driver RSS)
 DEFAULT_MAX_POSTINGS = 20_000_000
+
+_NO_POSTINGS = (np.empty(0, np.int32), np.empty(0, np.int32))
 
 
 class HotReplica:
@@ -75,16 +86,31 @@ class HotReplica:
     def __init__(
         self,
         postings: dict,
+        slot_doc: np.ndarray,
+        slot_size: np.ndarray,
+        late_slots: dict,
         values: dict,
         config: IndexConfig,
         n_postings: int,
         max_postings: int = DEFAULT_MAX_POSTINGS,
     ):
-        #: term -> (sizes int32[], doc_ids int64[], mults int32[]) — the
-        #: posting list, multiplicity-annotated (multiset semantics), sorted
-        #: by (size, doc_id): every constructor and mutator keeps that order,
-        #: since the LengthFilter slice relies on it
+        #: term -> (sizes int32[], slots int32[]) — one entry per posting
+        #: occurrence (a doc's multiplicity in a term is how often its slot
+        #: repeats), sorted by (size, slot): every constructor and mutator
+        #: keeps that order, since the LengthFilter slice relies on it
         self._postings = postings
+        #: slot -> doc_id (int64) and slot -> size (int32).  from_frames
+        #: numbers slots in ascending doc_id order; patched() appends a slot
+        #: per new doc_id, so slot order is doc_id order only up to
+        #: ``_n_sorted``.  A deleted doc's slot stays, unreferenced.
+        self._slot_doc = slot_doc
+        self._slot_size = slot_size
+        self._n_sorted = len(slot_doc) - len(late_slots)
+        #: doc_id -> slot for the slots patched() appended (small: the new
+        #: doc_ids since the last full build)
+        self._late_slots = late_slots
+        #: every posting's size is ≤ this (the Overlap window's clip)
+        self._max_size = int(slot_size.max()) if len(slot_size) else 0
         self._values = values
         self.config = config
         self.n_postings = n_postings
@@ -107,35 +133,46 @@ class HotReplica:
         ``ValueError`` above ``max_postings`` — the caller keeps the Spark
         path instead of OOM-ing the driver."""
         # bound-check BEFORE any driver transfer: the count is one metadata/
-        # cache-cheap job, while toPandas() on an over-bound index is
-        # exactly the driver OOM the bound exists to prevent
+        # cache-cheap job, while collecting an over-bound index is exactly
+        # the driver OOM the bound exists to prevent
         n = index_df.count()  # index rows == postings (duplicates included)
         if n > max_postings:
             raise ValueError(
                 f"index has {n} postings > max_postings={max_postings}; "
                 "serve it on the Spark path (coalesced) instead of a replica"
             )
-        agg = index_df.groupBy("term", "size", "doc_id").agg(
-            F.count(F.lit(1)).cast("int").alias("mult")
+        tbl = index_df.select("term", "size", "doc_id").toArrow()
+        # terms become int32 codes in Arrow: no Python string per posting
+        terms = pc.dictionary_encode(tbl.column("term").combine_chunks())
+        codes = terms.indices.to_numpy(zero_copy_only=False)
+        sizes = tbl.column("size").to_numpy().astype(np.int32)
+        slot_doc, slots = np.unique(tbl.column("doc_id").to_numpy(), return_inverse=True)
+        slots = slots.astype(np.int32)
+        del tbl
+        slot_size = np.zeros(len(slot_doc), np.int32)
+        slot_size[slots] = sizes  # a doc has exactly one size
+        order = np.lexsort((slots, sizes, codes))
+        sizes, slots = sizes[order], slots[order]
+        bounds = np.searchsorted(codes[order], np.arange(len(terms.dictionary) + 1))
+        # each term's list is a view into the two sorted arrays
+        postings = {
+            t: (sizes[s:e], slots[s:e])
+            for t, s, e in zip(terms.dictionary.to_pylist(), bounds[:-1], bounds[1:])
+        }
+        vt = dictionary.select("doc_id", "value").toArrow()
+        values = dict(zip(vt.column("doc_id").to_pylist(), vt.column("value").to_pylist()))
+        return cls(
+            postings, slot_doc, slot_size, {}, values, config, n, max_postings=max_postings
         )
-        pdf = agg.toPandas()  # Arrow batch transfer, not row-at-a-time collect
-        pdf = pdf.sort_values("term", kind="mergesort", ignore_index=True)
-        terms = pdf["term"].to_numpy()
-        sizes = pdf["size"].to_numpy(np.int32)
-        docs = pdf["doc_id"].to_numpy(np.int64)
-        mults = pdf["mult"].to_numpy(np.int32)
-        postings: dict = {}
-        if len(terms):
-            uniq, starts = np.unique(terms, return_index=True)
-            bounds = np.append(starts, len(terms))
-            for i, t in enumerate(uniq):
-                s, e = bounds[i], bounds[i + 1]
-                postings[t] = _size_sorted(sizes[s:e], docs[s:e], mults[s:e])
-        vdf = dictionary.select("doc_id", "value").toPandas()
-        values = dict(zip(vdf["doc_id"].tolist(), vdf["value"].tolist()))
-        return cls(postings, values, config, n, max_postings=max_postings)
 
     # -- incremental maintenance ----------------------------------------------
+
+    def _slot(self, doc_id: int) -> int | None:
+        """The slot holding ``doc_id``, or None if it never had postings."""
+        i = int(np.searchsorted(self._slot_doc[: self._n_sorted], doc_id))
+        if i < self._n_sorted and self._slot_doc[i] == doc_id:
+            return i
+        return self._late_slots.get(doc_id)
 
     def patched(self, upserts, deleted_ids=()) -> "HotReplica":
         """New replica with ``upserts`` applied and ``deleted_ids`` removed —
@@ -152,6 +189,8 @@ class HotReplica:
         result in atomically, exactly like the versioned index's
         manifest swap); untouched terms share their numpy arrays with the
         parent, so a trickle patch costs memory proportional to the delta.
+        A replaced doc keeps its slot, a new doc_id appends one, and a
+        deleted doc leaves its slot unreferenced.
 
         The old postings of a replaced/deleted doc are located by
         re-tokenizing its CURRENT dictionary value with the same
@@ -172,51 +211,57 @@ class HotReplica:
         # last would orphan the earlier value's grams forever (a later
         # delete re-tokenizes only the surviving value)
         ups = list({int(d): v for d, v in upserts}.items())
-        up_ids = {d for d, _ in ups}
-        removed = up_ids | {int(d) for d in deleted_ids}
+        removed = {d for d, _ in ups} | {int(d) for d in deleted_ids}
 
-        # terms whose posting lists lose rows, keyed by term -> doc_ids
-        rm_by_term: dict[str, set] = {}
-        n = self.n_postings
+        # terms whose posting lists lose rows, keyed by term -> slots
+        rm_by_term: dict[str, list] = {}
         for d in removed:
             v = self._values.get(d)
-            if v is None:
-                continue  # unknown / null-valued doc: nothing indexed for it
+            s = self._slot(d) if v is not None else None
+            if s is None:
+                continue  # unknown / null-valued / gram-less doc: nothing indexed
             for t in set(tokenize(v, self.config)):
-                rm_by_term.setdefault(t, set()).add(d)
+                rm_by_term.setdefault(t, []).append(s)
 
-        # terms gaining rows, keyed by term -> [(doc_id, size, mult)]
-        add_by_term: dict[str, list] = {}
+        # terms gaining rows, keyed by term -> ([sizes], [slots]), one entry
+        # per occurrence
+        add_by_term: dict[str, tuple] = {}
+        late = self._late_slots
+        new_docs, sized = [], {}
+        n = self.n_postings
         for d, v in ups:
             terms = tokenize(v, self.config) if v is not None else []
-            size = len(terms)
-            for t, m in Counter(terms).items():
-                add_by_term.setdefault(t, []).append((d, size, m))
-                n += m
+            if not terms:
+                continue
+            s = self._slot(d)
+            if s is None:
+                if late is self._late_slots:
+                    late = dict(late)  # copy-on-write: only the appended slots
+                s = late[d] = len(self._slot_doc) + len(new_docs)
+                new_docs.append(d)
+            sized[s] = len(terms)
+            n += len(terms)
+            for t in terms:
+                add = add_by_term.setdefault(t, ([], []))
+                add[0].append(len(terms))
+                add[1].append(s)
 
         postings = dict(self._postings)  # shallow: untouched terms shared
-        for t in set(rm_by_term) | set(add_by_term):
-            cur = postings.get(t)
-            if cur is not None:
-                sizes, docs, mults = cur
-                rmset = rm_by_term.get(t)
-                if rmset:
-                    keep = ~np.isin(docs, np.fromiter(rmset, np.int64, len(rmset)))
-                    n -= int(mults[~keep].sum())
-                    sizes, docs, mults = sizes[keep], docs[keep], mults[keep]
-            else:
-                sizes = np.empty(0, np.int32)
-                docs = np.empty(0, np.int64)
-                mults = np.empty(0, np.int32)
-            adds = add_by_term.get(t)
-            if adds:  # a row drop keeps the order; appended rows need a re-sort
-                sizes, docs, mults = _size_sorted(
-                    np.concatenate([sizes, np.array([a[1] for a in adds], np.int32)]),
-                    np.concatenate([docs, np.array([a[0] for a in adds], np.int64)]),
-                    np.concatenate([mults, np.array([a[2] for a in adds], np.int32)]),
-                )
-            if len(docs):
-                postings[t] = (sizes, docs, mults)
+        for t in rm_by_term.keys() | add_by_term.keys():
+            sizes, slots = postings.get(t, _NO_POSTINGS)
+            rm = rm_by_term.get(t)
+            if rm:
+                keep = ~np.isin(slots, rm)
+                n -= len(slots) - int(np.count_nonzero(keep))
+                sizes, slots = sizes[keep], slots[keep]
+            add = add_by_term.get(t)
+            if add:  # a row drop keeps the order; appended rows need a re-sort
+                sizes = np.concatenate([sizes, np.array(add[0], np.int32)])
+                slots = np.concatenate([slots, np.array(add[1], np.int32)])
+                order = np.lexsort((slots, sizes))
+                sizes, slots = sizes[order], slots[order]
+            if len(slots):
+                postings[t] = (sizes, slots)
             else:
                 postings.pop(t, None)
 
@@ -225,12 +270,24 @@ class HotReplica:
                 f"patched replica would hold {n} postings > max_postings="
                 f"{self.max_postings}; rebuild on the Spark path instead"
             )
+        slot_doc = self._slot_doc
+        slot_size = self._slot_size
+        if new_docs:
+            slot_doc = np.concatenate([slot_doc, np.array(new_docs, np.int64)])
+            slot_size = np.concatenate([slot_size, np.zeros(len(new_docs), np.int32)])
+        elif sized:
+            slot_size = slot_size.copy()
+        if sized:
+            slot_size[list(sized)] = list(sized.values())
         values = dict(self._values)
         for d in removed:
             values.pop(d, None)
         for d, v in ups:
             values[d] = v
-        return HotReplica(postings, values, self.config, n, max_postings=self.max_postings)
+        return HotReplica(
+            postings, slot_doc, slot_size, late, values, self.config, n,
+            max_postings=self.max_postings,
+        )
 
     def values_copy(self) -> dict:
         """Fresh ``{doc_id: value}`` of this snapshot's dictionary — the
@@ -240,32 +297,24 @@ class HotReplica:
 
     # -- the scan-count core (shared by suggest and autocomplete) ------------
 
-    def _accumulate(self, counts: Counter, size_lo: int, size_hi: int | None):
-        """(doc_ids asc, sizes int64, overlaps int64) for docs sharing ≥1 gram
-        with the query, sizes within [size_lo, size_hi] (``None``: no upper
-        bound); overlap = multiset product Σ_t mult_q(t)·mult_d(t)."""
-        docs_parts, sizes_parts, w_parts = [], [], []
+    def _scan_count(self, counts: Counter, size_lo: int, size_hi: int):
+        """Per-slot overlap (int64, indexed by slot) with the query, over
+        docs whose size is in [size_lo, size_hi]; None when no posting is in
+        the window.  overlap = multiset product Σ_t mult_q(t)·mult_d(t):
+        each occurrence list is counted mult_q(t) times."""
+        parts = []
         for t, mq in counts.items():
             p = self._postings.get(t)
             if p is None:
                 continue
-            psizes, pdocs, pmults = p
-            lo = np.searchsorted(psizes, size_lo, "left")
-            hi = len(psizes) if size_hi is None else np.searchsorted(psizes, size_hi, "right")
-            if lo >= hi:
-                continue
-            docs_parts.append(pdocs[lo:hi])
-            sizes_parts.append(psizes[lo:hi])
-            w_parts.append(pmults[lo:hi] * mq)
-        if not docs_parts:
+            sizes, slots = p
+            lo = sizes.searchsorted(size_lo, "left")
+            hi = sizes.searchsorted(size_hi, "right")
+            if lo < hi:
+                parts += [slots[lo:hi]] * mq
+        if not parts:
             return None
-        docs = np.concatenate(docs_parts)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        # float64 sums of small ints are exact: cast back loses nothing
-        overlap = np.bincount(inv, weights=np.concatenate(w_parts)).astype(np.int64)
-        size_b = np.empty(len(uniq), dtype=np.int64)
-        size_b[inv] = np.concatenate(sizes_parts)  # a doc has exactly one size
-        return uniq, size_b, overlap
+        return np.bincount(np.concatenate(parts))
 
     # -- queries --------------------------------------------------------------
 
@@ -278,15 +327,23 @@ class HotReplica:
         if size_a == 0 or k < 1:
             return []
         min_b = max(int(metric.min_y_py(alpha, size_a)), 1)
-        max_b = int(metric.max_y_py(alpha, size_a))
-        acc = self._accumulate(Counter(terms), min_b, max_b)
-        if acc is None:
+        max_b = min(int(metric.max_y_py(alpha, size_a)), self._max_size)
+        if min_b > max_b:
             return []
-        uniq, size_b, overlap = acc
+        cnt = self._scan_count(Counter(terms), min_b, max_b)
+        if cnt is None:
+            return []
+        # CountFilter floor: no size in the window admits an overlap below
+        # tmin, so the exact mask below implies it — it only drops slots early
+        window = np.arange(min_b, max_b + 1)
+        tmin = max(1, int(metric.threshold_np(alpha, size_a, window).min()))
+        slots = np.flatnonzero(cnt >= tmin)
+        overlap = cnt[slots]
+        size_b = self._slot_size[slots].astype(np.int64)
         t = metric.threshold_np(alpha, size_a, size_b)
         # segment validity + CountFilter — same predicate as the plan
         ok = (t >= 1) & (t <= size_a) & (t <= size_b) & (overlap >= t)
-        docs = uniq[ok]
+        docs = self._slot_doc[slots[ok]]
         neg = -metric.similarity_np(overlap[ok], size_a, size_b[ok])
         if len(neg) > k:  # keep every candidate tied with the k-th score
             tie = neg <= np.partition(neg, k - 1)[k - 1]
@@ -305,17 +362,13 @@ class HotReplica:
         size_a = len(terms)
         if size_a == 0 or k < 1:
             return []
-        acc = self._accumulate(Counter(terms), size_a, None)
-        if acc is None:
+        cnt = self._scan_count(Counter(terms), size_a, self._max_size)
+        if cnt is None:
             return []
-        uniq, _, overlap = acc
-        # np.unique returns doc_ids ascending: the first k matches are the
-        # k smallest ids
-        first = uniq[overlap >= size_a][:k]
-        return [self._values.get(d) for d in first.tolist()]
-
-
-def _size_sorted(sizes: np.ndarray, docs: np.ndarray, mults: np.ndarray) -> tuple:
-    """One term's posting list reordered by (size, doc_id)."""
-    order = np.lexsort((docs, sizes))
-    return sizes[order], docs[order], mults[order]
+        docs = self._slot_doc[np.flatnonzero(cnt >= size_a)]
+        # slot order is not doc_id order once a patch appended slots: take
+        # the k smallest ids explicitly
+        if len(docs) > k:
+            docs = np.partition(docs, k - 1)[:k]
+        docs.sort()
+        return [self._values.get(d) for d in docs.tolist()]
